@@ -4,6 +4,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -26,11 +27,17 @@ import org.apache.spark.sql.SparkSession
   *
   * Serving reads go through [[IntervalQuery.serve]] — the same
   * second-truncated inclusive-interval query the engine runs everywhere
-  * else; responses are interval-bounded, exactly like the reference
-  * returns the full fetched list. This is a serving SHIM for parity:
-  * one JVM, driver-side collect of an interval-bounded result — not a
-  * data-plane component (SURVEY §1.1 keeps the API layer out of the
-  * engine proper).
+  * else, as a prepared plan with bound parameters; responses are
+  * interval-bounded, exactly like the reference returns the full
+  * fetched list.
+  *
+  * Thread model: the server's dispatcher thread accepts connections and
+  * hands each exchange to a fixed pool of `availableProcessors()`
+  * handler threads, so requests run their Spark jobs concurrently on
+  * the shared session instead of queueing behind one another; further
+  * requests wait in the pool's queue. Handler threads are daemons and
+  * idle ones time out, so a stopped server leaves no thread that keeps
+  * the JVM alive.
   */
 object DolarApi {
 
@@ -44,6 +51,7 @@ object DolarApi {
   def start(spark: SparkSession, port: Int = 0,
             table: String = "dolar"): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
+    server.setExecutor(handlerPool())
 
     server.createContext("/health", (ex: HttpExchange) =>
       respond(ex, 200, """{"status":"ok"}"""))
@@ -89,6 +97,19 @@ object DolarApi {
 
     server.start()
     server
+  }
+
+  /** The handler threads of the thread model above. */
+  private def handlerPool(): ThreadPoolExecutor = {
+    val n = Runtime.getRuntime.availableProcessors()
+    val pool = new ThreadPoolExecutor(n, n, 30L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "DolarApi-handler")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
   }
 
   private def detail(msg: String): String =

@@ -182,4 +182,25 @@ class CodegenSpec extends SparkSpec with BeforeAndAfterAll {
     assert(chain(e).exists(c =>
       String.valueOf(c.getMessage).contains("not a CMS sketch")))
   }
+
+  test("BoundParam compiles codegen-only and agrees with eval") {
+    import graft.functions.BoundParam
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val ts = java.sql.Timestamp.valueOf("2025-09-10 13:00:56")
+    val values = Seq[Any](ts, 42L, 2.5, "abc")
+    val row = spark.range(3).toDF("id")
+      .filter(col("id") >= BoundParam(1L))
+      .select(values.map(v => BoundParam(v)) ++
+        values.map(v => BoundParam(v) === lit(v)) :+ (col("id") + BoundParam(42L)): _*)
+      .collect()
+    assert(row.length == 2)
+    assert(row.head.toSeq.take(4) == Seq(ts, 42L, 2.5, "abc"))
+    assert(row.forall(_.toSeq.slice(4, 8) == Seq(true, true, true, true)))
+    assert(row.map(_.getLong(8)).toSeq == Seq(43L, 44L))
+    // eval returns the internal value the generated code reads
+    values.foreach { v =>
+      val l = Literal.create(v)
+      assert(BoundParam(l.value, l.dataType).eval(null) == l.value)
+    }
+  }
 }

@@ -3,7 +3,13 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
+import java.time.{LocalDateTime, ZoneOffset}
+import java.time.format.DateTimeFormatter
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import graft.ingest.{DolarIngest, RawZone}
 import graft.serve.DolarApi
 
@@ -11,7 +17,8 @@ import graft.serve.DolarApi
   * tests.py): fixture payloads -> ingest -> REST API over the engine's
   * interval query, asserting status codes, the exact Spanish 400 detail,
   * the 422 validation status, the 500 DB-error mapping, and the
-  * count/data response shape with golden values.
+  * count/data response shape with golden values — also under
+  * concurrent clients, and with no thread left behind by `stop`.
   */
 class DolarApiSpec extends SparkSpec {
 
@@ -67,5 +74,82 @@ class DolarApiSpec extends SparkSpec {
       server.stop(0)
       spark.sql("DROP TABLE IF EXISTS dolar_api")
     }
+  }
+
+  /** Four days of 10-minute points (epoch seconds, valor) from
+    * 2025-09-01T00:00:00Z, ingested into `table`.
+    */
+  private def loadGrid(table: String): IndexedSeq[(Long, BigDecimal)] = {
+    val t0 = LocalDateTime.parse("2025-09-01T00:00:00").toEpochSecond(ZoneOffset.UTC)
+    val points = (0 until 4 * 144).map(i => (t0 + 600L * i, BigDecimal(390000 + 7 * i, 2)))
+    val raw = Files.createTempDirectory("graft_api_grid").toString
+    RawZone.write(raw, t0, points.map { case (t, v) => s"""["${t * 1000}","$v"]""" }
+      .mkString("[", ",", "]"))
+    DolarIngest.batchToTable(spark, raw, table)
+    points
+  }
+
+  private def iso(epochSeconds: Long): String =
+    LocalDateTime.ofEpochSecond(epochSeconds, 0, ZoneOffset.UTC)
+      .format(DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
+
+  test("8 concurrent clients with distinct intervals each get their golden rows") {
+    val table = "dolar_api_concurrent"
+    val points = loadGrid(table)
+    val server = DolarApi.start(spark, 0, table)
+    val port = server.getAddress.getPort
+    val mapper = new ObjectMapper()
+    val failures = new ConcurrentLinkedQueue[String]
+    val gate = new CountDownLatch(1)
+    try {
+      val clients = (0 until 8).map { k =>
+        // unaligned, second-truncated bounds: start 7 min into hour 5k
+        val start = points.head._1 + 5 * 3600L * k + 420
+        val end = start + 3 * 3600L * (k + 1) + 30
+        val want = points.filter { case (t, _) => t >= start && t <= end }
+        val body = s"""{"start":"${iso(start)}.250","end":"${iso(end)}.999"}"""
+        new Thread(() => {
+          gate.await()
+          try for (_ <- 1 to 3) {
+            val resp = post(port, body)
+            val root = mapper.readTree(resp.body())
+            val data = root.path("data")
+            val ok = resp.statusCode() == 200 &&
+              root.path("count").asLong(-1) == want.size && data.size == want.size &&
+              data.get(0).path("fechahora").asText() == iso(want.head._1) &&
+              data.get(0).path("valor").asDouble() == want.head._2.toDouble &&
+              data.get(data.size - 1).path("fechahora").asText() == iso(want.last._1) &&
+              data.get(data.size - 1).path("valor").asDouble() == want.last._2.toDouble
+            if (!ok) failures.add(s"client $k: $body -> ${resp.statusCode()} ${resp.body().take(200)}")
+          } catch { case e: Exception => failures.add(s"client $k: $body -> $e") }
+        })
+      }
+      clients.foreach(_.start())
+      gate.countDown()
+      clients.foreach(_.join())
+      assert(failures.isEmpty, failures.asScala.mkString("\n"))
+    } finally {
+      server.stop(0)
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
+  }
+
+  test("stop(0) leaves no non-daemon DolarApi thread behind") {
+    val table = "dolar_api_stop"
+    val points = loadGrid(table)
+    val server = DolarApi.start(spark, 0, table)
+    def apiThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("DolarApi"))
+    try {
+      val resp = post(server.getAddress.getPort,
+        s"""{"start":"${iso(points.head._1)}","end":"${iso(points.last._1)}"}""")
+      assert(resp.statusCode() == 200)
+      assert(apiThreads.nonEmpty, "requests are not served by the handler pool")
+    } finally {
+      server.stop(0)
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
+    val nonDaemon = apiThreads.filterNot(_.isDaemon)
+    assert(nonDaemon.isEmpty, s"threads that would keep the JVM alive: $nonDaemon")
   }
 }
