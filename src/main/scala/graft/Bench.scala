@@ -181,7 +181,7 @@ object Bench {
     // query doesn't absorb the whole-stage-codegen infrastructure cost
     try {
       import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+      Tables.load(spark, sfDir, "lineitem")
         .groupBy(col("l_returnflag")).agg(sum(col("l_quantity")).as("q"))
         .orderBy(col("q"))
         .write.format("noop").mode("overwrite").save()

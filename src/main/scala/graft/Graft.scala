@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Session-level knobs for the engine, read lazily per call site so a
@@ -74,16 +74,34 @@ object Graft {
     * concurrent builds. Rethrows the FIRST failure with every other
     * concurrent failure attached as a suppressed exception, so a
     * multi-job crash keeps all of its diagnostics.
+    *
+    * Failure is bounded: every worker thread tags its jobs with one
+    * call-unique job tag, and the first failure cancels all jobs under
+    * it, so a crashed leg does not wait for its siblings to run to
+    * completion. The tag is re-cancelled while siblings are still
+    * alive, which also stops a job a sibling starts after the failure.
+    * Tags sit beside the job group the threads inherit from the caller,
+    * so group-based attribution and cancellation still apply.
     */
-  def parallelJobs(jobs: Seq[() => Unit]): Unit = {
+  def parallelJobs(spark: SparkSession, jobs: Seq[() => Unit]): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-parallel-${java.util.UUID.randomUUID()}"
+    def cancelSiblings(): Unit = sc.cancelJobsWithTag(tag, "a sibling parallel job failed")
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = jobs.map { j =>
-      val t = new Thread(() => try j() catch { case e: Throwable => errs.add(e) })
+      val t = new Thread(() =>
+        try { sc.addJobTag(tag); j() }
+        catch { case e: Throwable => val _ = errs.add(e); cancelSiblings() })
       t.setDaemon(true)
       t.start()
       t
     }
-    threads.foreach(_.join())
+    threads.foreach { t =>
+      while (t.isAlive) {
+        t.join(100)
+        if (!errs.isEmpty) cancelSiblings()
+      }
+    }
     if (!errs.isEmpty) {
       val it = errs.iterator()
       val first = it.next()

@@ -57,11 +57,11 @@ object Bucketing {
     val ordT = s"graft_bkt_ord_$tag"
     val tmp = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
     writeBucketed(
-      s.read.parquet(s"$dir/customer.parquet")
+      graft.Tables.load(s, dir, "customer")
         .select(col("c_custkey").as("custkey"), col("c_nationkey")),
       custT, "custkey", 8, s"$tmp/cust")
     writeBucketed(
-      s.read.parquet(s"$dir/orders.parquet")
+      graft.Tables.load(s, dir, "orders")
         .select(col("o_custkey").as("custkey"), col("o_totalprice")),
       ordT, "custkey", 8, s"$tmp/ord")
     bucketedEquiJoin(s, custT, ordT, "custkey")

@@ -57,9 +57,9 @@ object SkewJoin {
     * 90%-hot key and asserts the salted shuffle splits it.
     */
   def skewJoinDemo(s: SparkSession, dir: String): DataFrame = {
-    val o = s.read.parquet(s"$dir/orders.parquet")
+    val o = graft.Tables.load(s, dir, "orders")
       .select(col("o_custkey").as("custkey"), col("o_orderkey"))
-    val c = s.read.parquet(s"$dir/customer.parquet")
+    val c = graft.Tables.load(s, dir, "customer")
       .select(col("c_custkey").as("custkey"), col("c_mktsegment"))
     saltedEquiJoin(o, c, "custkey", salts = 8,
         saltOf = col("o_orderkey"))

@@ -59,7 +59,7 @@ object ZOrder {
     * partial-combined.
     */
   def zorderLayout(s: SparkSession, dir: String): DataFrame = {
-    val li = s.read.parquet(s"$dir/lineitem.parquet")
+    val li = graft.Tables.load(s, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"),
         zkey(col("l_partkey"), col("l_suppkey")).as("zk"),
         col("l_orderkey"), col("l_linenumber"))

@@ -697,7 +697,7 @@ object GraphQueries {
       // instead of leaving the executor idle (optimization-guide §2.6;
       // measured r17: 7.1 s sequential → the longest single build).
       // Failures propagate: the first build error rethrows here.
-      Graft.parallelJobs(Seq(
+      Graft.parallelJobs(s, Seq(
         () => { val _ = tradeEdges(s, dir); () },
         () => { val _ = tradePairCounts(s, dir); () },
         () => { val _ = copurchaseEdges(s, dir); () },

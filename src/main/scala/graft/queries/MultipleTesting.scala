@@ -98,7 +98,7 @@ object MultipleTesting {
       () => one("wilcoxon_signed",
         Drift.wilcoxonSignedRank(s, dir), col("z")))
     val built = new Array[DataFrame](legs.length)
-    graft.Graft.parallelJobs(legs.zipWithIndex.map { case (f, i) =>
+    graft.Graft.parallelJobs(s, legs.zipWithIndex.map { case (f, i) =>
       () => { built(i) = graft.Graft.materialize(f()) }
     })
     val battery = built.reduce(_.unionAll(_))

@@ -1429,7 +1429,7 @@ object Relational {
     val specs = Seq(col("last_order") -> "r_score",
       col("frequency") -> "f_score", col("monetary") -> "m_score")
     val scored = new Array[DataFrame](specs.length)
-    Graft.parallelJobs(specs.zipWithIndex.map { case ((c, nm), i) =>
+    Graft.parallelJobs(s, specs.zipWithIndex.map { case ((c, nm), i) =>
       () => { scored(i) = score(c, nm) }
     })
     base

@@ -13,42 +13,21 @@ import org.apache.spark.sql.types._
   */
 object EventsStream {
 
-  /** events file-source schema with `ts` in the given physical type
-    * (LONG nanos for legacy testdata, TIMESTAMP_NTZ/TIMESTAMP for
-    * current generations; see Tables.events for the history).
-    */
-  def rawSchema(tsType: org.apache.spark.sql.types.DataType): StructType =
-    StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", tsType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-
   /** Streaming read of the events parquet dir. A streaming file source
-    * needs an explicit schema, but the testdata's `ts` encoding has
+    * needs an explicit schema, and the testdata's `ts` encoding has
     * varied across driver generations (nanos-long vs TIMESTAMP(MICROS);
-    * see Tables.events) — so probe the actual type with one batch
-    * footer read, declare the matching stream schema, and normalize to
-    * the canonical microsecond TIMESTAMP exactly like the batch reader.
-    * The footer probe is driver-side metadata only, not a data scan.
-    * Like Tables.events, legacy nanos files REQUIRE
-    * `spark.sql.legacy.parquet.nanosAsLong=true` on the session — set
-    * by the session owner, never in here.
+    * see Tables.events) — so declare the table's schema as `Tables`
+    * resolves it (inferred once per session and file listing, no data
+    * scan) and normalize `ts` to the canonical microsecond TIMESTAMP
+    * with the batch reader's own adaptation. Like Tables.events, legacy
+    * nanos files REQUIRE `spark.sql.legacy.parquet.nanosAsLong=true` on
+    * the session — set by the session owner, never in here.
     */
-  def readStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val tsType = spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType
-    val raw = spark.readStream
-      .schema(rawSchema(tsType))
+  def readStream(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Tables.canonicalTs(spark.readStream
+      .schema(graft.Tables.load(spark, sfDir, "events").schema)
       .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    tsType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
-  }
+      .parquet(sfDir))
 
   /** Stream-STATIC enrichment join: each streaming event picks up its
     * user's dimension attributes (here the market segment from the
