@@ -120,44 +120,13 @@ object Bench {
     // (a big t_main_ms) instead of inside some query's wall time
     val tMainMs = JvmStats.uptimeMs
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val taskMetrics = new TaskMetricsListener
-    // r15 post-mortem: the driver bench JVM died mid-suite with exit 56
-    // = ExecutorExitCode.HEARTBEAT_FAILURE — in local[*] the in-process
-    // executor System.exit()s the WHOLE JVM after ~60 consecutive missed
-    // heartbeats to the same-JVM driver (a ~10-min GC storm or host
-    // stall), zeroing the round's artifacts. An in-process heartbeat
-    // self-kill is pure downside locally (there is no cluster manager to
-    // replace the executor), so the session builder disarms it: long
-    // interval, long network timeout, effectively-unbounded failure
-    // budget. On a REAL cluster these stay at their defaults — this
-    // builder is the local bench harness, not library code.
+    // one adjacency materialization for the whole graph family (the
+    // real-pipeline posture; the first graph query to run pays the
+    // build, the rest reuse it). Standalone per-query numbers:
+    // tools/bench_loop.sh / QBench, which leave the conf off.
     def buildSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.executor.heartbeatInterval", "60s")
-        .config("spark.network.timeout", "600s")
-        .config("spark.executor.heartbeat.maxFailures", "10000")
-        // the default 100-entry codegen cache is thrashed by a
-        // 382-query application (measured r18: the first 100 queries
-        // alone compile ~2000 generated classes), so every warmed
-        // class is evicted and re-janino'd — as a NEW class, whose
-        // methods HotSpot must re-JIT from scratch — before its timed
-        // twin runs. 10000 entries covers the suite; the same setting
-        // is standard posture for any long-lived multi-query Spark app
-        // (Thrift server, notebook cluster).
-        .config("spark.sql.codegen.cache.maxEntries", "10000")
-        // one adjacency materialization for the whole graph family (the
-        // real-pipeline posture; the first graph query to run pays the
-        // build, the rest reuse it). Standalone per-query numbers:
-        // tools/bench_loop.sh / QBench, which leave the conf off.
-        .config(graft.queries.GraphQueries.CacheEdgesKey,
-          sys.env.getOrElse("SPARK_GRAFT_CACHE_EDGES", "true"))
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = Sessions.local(Sessions.cacheEdgesEnv(default = true))
       s.sparkContext.addSparkListener(taskMetrics)
       s
     }
@@ -175,78 +144,46 @@ object Bench {
       }
       spark
     }
+    // A failed warm-up costs warmth, not the suite: it is logged and the
+    // bench goes on (the timed run of the same query then fails loudly).
+    def warm(name: String)(body: => Unit): Unit =
+      try body
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm $name failed: ${e.getClass.getSimpleName}: " +
+          String.valueOf(e.getMessage).take(200))
+      }
     // warmup: pay JVM/codegen/parquet-footer/noop-writer startup outside
     // the timings — a representative scan+agg+sort pipeline through the
     // same write path the timed queries use, so the alphabetically-first
     // query doesn't absorb the whole-stage-codegen infrastructure cost
-    try {
+    warm("generic") {
       import org.apache.spark.sql.functions._
       Tables.load(spark, sfDir, "lineitem")
         .groupBy(col("l_returnflag")).agg(sum(col("l_quantity")).as("q"))
         .orderBy(col("q"))
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
-    // The generic warmup doesn't touch HLL / codebook-literal / regex
-    // codegen, so those queries pay 2-3x first-run JIT inside their own
-    // timing every round (r5-r7 instrumented this as jit_ms inside the
-    // wall window). Generated code is data-independent: running the same
-    // pipelines once at the smallest sf compiles + JIT-warms the
-    // identical classes for cents, keeping the timed run steady-state.
-    // r12 additions measured the same fingerprint (jit_ms ≳ wall):
-    // ann_ivfpq_topk 6.3 s, dedup_exact_substring 3.8 s,
-    // decontaminate_bloom 2.6 s, graph_ppr_walks 4.3 s of in-window JIT.
-    {
-      val p = java.nio.file.Paths.get(sfDir)
-      val sib = p.resolveSibling("sf0.001")
-      val warmDir = if (java.nio.file.Files.isDirectory(sib)) sib.toString
-                    else sfDir
-      // r17 measured: extending this list with the graph iterative
-      // family did NOT transfer (their in-window JIT stayed ~7 s —
-      // their generated code is AQE-shape-dependent, so the sf0.001
-      // classes differ from the sf0.1 ones), while the ANN rows DID
-      // become warmable once assignCells stopped inlining codebook
-      // values into its generated source (NearestCentroidPos). The
-      // list therefore stays the r12 set; the A/B lives in
-      // OPTIMIZATION_r17.md.
-      for (q <- Seq("agg_approx_distinct", "ann_ivf_topk", "string_funcs",
-        "ann_ivfpq_topk", "dedup_exact_substring", "decontaminate_bloom",
-        "graph_ppr_walks"))
-        try {
-          SparkEntry.queries(q)(spark, warmDir)
-            .write.format("noop").mode("overwrite").save()
-        } catch { case _: Throwable => () }
-      // No sf0.001 sibling ⇒ the graph warm query just pre-built the
-      // TIMED dir's edge cache, and the `_graph_cache_build` row below
-      // would under-report the very build it exists to attribute. Drop
-      // the cache so the timed row measures the real build (the JIT
-      // warmth survives — generated classes are data-independent).
-      if (warmDir == sfDir) graft.queries.GraphQueries.clearEdgeCache()
     }
-    // The graph Pregel family is the one family the sf0.001 list can
-    // NEVER warm: r17 A/B'd the extension and the in-window JIT stayed
-    // ~7 s, and r18's JitProbe found why — their generated code is
-    // AQE-shape-dependent (join strategies differ across SFs), so the
-    // sf0.001 classes are different source text, while a SAME-SF first
-    // run leaves rep2 compiling ZERO new classes (janino count 0) with
-    // walls down 30-45% (pagerank 4.1→1.7 s, labelprop 4.2→2.3 s).
-    // So exactly these queries warm at the TIMED SF. Contract kept:
-    // results are discarded, and every carried intermediate — the edge
-    // cache and all persisted checkpoint blocks — is dropped below, so
-    // the timed rows recompute everything from the parquet inputs; the
-    // only thing that survives is compiled code, the same thing the
-    // r12 sf0.001 warmup list exists to carry.
-    {
-      for (q <- Seq("graph_pagerank", "graph_ppr_walks", "graph_sssp",
-        "graph_label_propagation", "graph_kcore", "graph_khop_reach",
-        "graph_closeness_sampled"))
-        try {
-          SparkEntry.queries(q)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-        } catch { case _: Throwable => () }
-      graft.queries.GraphQueries.clearEdgeCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+    // Per-query warm-ups, as each registry record declares
+    // (SparkEntry.Warm): SmallSf rows at the sf0.001 sibling (the timed
+    // dir when there is none), then TimedSf rows at the timed dir.
+    // Contract: results are discarded, and every carried intermediate —
+    // the edge cache and all persisted checkpoint blocks — is dropped
+    // below, so the timed rows recompute everything from the parquet
+    // inputs; the only thing that survives is compiled code.
+    val smallDir = {
+      val sib = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
+      if (java.nio.file.Files.isDirectory(sib)) sib.toString else sfDir
     }
+    def warmAll(kind: SparkEntry.Warm, dir: String): Unit =
+      for (q <- SparkEntry.registry.filter(_.warm == kind))
+        warm(q.name) {
+          q.build(spark, dir).write.format("noop").mode("overwrite").save()
+        }
+    warmAll(SparkEntry.Warm.SmallSf, smallDir)
+    warmAll(SparkEntry.Warm.TimedSf, sfDir)
+    graft.queries.GraphQueries.clearEdgeCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
     var failed = List.empty[String]
     val stats = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Incremental per-query record (r15 lesson: the bench printed its

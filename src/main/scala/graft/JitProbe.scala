@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (like [[QBench]]): run registry queries with repeats and
   * print, per rep, the JVM JIT wall-time delta and the Spark codegen
   * (janino) compilation count/time deltas — so "query X re-JITs every
@@ -19,16 +17,7 @@ object JitProbe {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(graft.queries.GraphQueries.CacheEdgesKey,
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_EDGES", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cacheEdgesEnv(default = true))
     val tm = new TaskMetricsListener
     spark.sparkContext.addSparkListener(tm)
     val cm = org.apache.spark.metrics.source.CodegenMetrics
@@ -57,7 +46,7 @@ object JitProbe {
     }
     // JITPROBE_POLLUTE=<n>: run the first n registry queries between
     // warm and timed reps — reproduces the bench's alphabetical gap to
-    // test whether the 100-entry codegen cache evicts the warm classes.
+    // test whether the codegen cache evicts the warm classes.
     sys.env.get("JITPROBE_POLLUTE").map(_.toInt).foreach { n =>
       for ((nm, fn) <- SparkEntry.queries.toSeq.sortBy(_._1).take(n))
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()

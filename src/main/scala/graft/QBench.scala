@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time one or more SparkEntry queries in a fresh JVM.
   * Usage: runMain graft.QBench <name[,name2,...]> [repeats]
   * (sfDir from SPARK_GRAFT_SF_DIR, threads from SPARK_GRAFT_CPUS;
@@ -17,23 +15,10 @@ object QBench {
     }
     val reps = if (args.length > 1) args(1).toInt else 1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // SPARK_GRAFT_SHUFFLE_PARTS: scale-posture experiments (e.g. the
-      // 10x scalecheck A/B of session-wide partition counts) without
-      // touching the cpus-derived default every normal run uses
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // default OFF here (unlike Bench): QBench measures STANDALONE
-      // query cost, so each rep must pay its own edge build unless the
-      // caller explicitly opts into the shared-adjacency posture
-      .config(graft.queries.GraphQueries.CacheEdgesKey,
-        sys.env.getOrElse("SPARK_GRAFT_CACHE_EDGES", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // cache-edges default OFF here (unlike Bench): QBench measures
+    // STANDALONE query cost, so each rep must pay its own edge build
+    // unless the caller explicitly opts into the shared-adjacency posture
+    val spark = Sessions.local(Sessions.cacheEdgesEnv(default = false))
     for (n <- name.split(",").map(_.trim).filter(_.nonEmpty)) {
       val fn = SparkEntry.queries(n)
       (1 to reps).foreach { r =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (SCALECHECK, r16 verdict item 1): materialize an N× replica
@@ -39,15 +39,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(src, dest, factorS) = args
     val n = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cacheEdges = false)
 
     def copies(df: DataFrame)(f: (DataFrame, Int) => DataFrame): DataFrame =
       (0 until n).map(k => f(df, k)).reduce(_ unionAll _)

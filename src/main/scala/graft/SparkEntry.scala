@@ -9,13 +9,13 @@ import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every entry in [[queries]] is a pure DataFrame transform over the
-  * test tables in `sfDir` (no actions except the self-contained dolar
-  * e2e demo, which materializes its own fixture micro-table first).
-  * Entries with a matching [[oracleSql]] are hash-checked against DuckDB
-  * on the same parquet; the rest are rows-only checked and covered by
+  * Every record in [[registry]] builds a pure DataFrame transform over
+  * the test tables in `sfDir` (no actions except the self-contained
+  * dolar e2e demo, which materializes its own fixture micro-table
+  * first). Records with an oracle are hash-checked against DuckDB on
+  * the same parquet; the rest are rows-only checked and covered by
   * ScalaTest specs instead.
   */
 object SparkEntry {
@@ -202,423 +202,15 @@ object SparkEntry {
        |  AND ts <= TIMESTAMP '2025-09-11 00:00:00'
        |ORDER BY fechahora""".stripMargin
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // reference parity
-    "dolar_e2e_interval" -> (dolarE2e _),
-    "dolar_e2e_stream" -> (dolarE2eStream _),
-    "dolar_e2e_stream_pt" -> (dolarE2eStreamPt _),
-    "dolar_parity" -> (dolarParity _),
-    "interval_events" -> (EventQueries.intervalEvents _),
-    // relational: aggregation
-    "q1_pricing_summary" -> (Relational.q1PricingSummary _),
-    "agg_orders_by_priority" -> (Relational.aggOrdersByPriority _),
-    "agg_cube" -> (Relational.aggCube _),
-    "agg_rollup" -> (Relational.aggRollup _),
-    "agg_count_distinct" -> (Relational.aggCountDistinct _),
-    "agg_approx_distinct" -> (Relational.aggApproxDistinctAudit _),
-    "agg_minmax_by_brand" -> (Relational.aggMinMaxByBrand _),
-    "agg_mode_by_brand" -> (Relational.modeByBrand _),
-    "agg_geomean_by_brand" -> (Relational.geomeanByBrand _),
-    "agg_skew_kurtosis" -> (Relational.skewKurtosisByBrand _),
-    "stats_quantiles_exact" -> (Relational.quantilesExact _),
-    "seq_gap_islands" -> ((s, d) => Relational.eventIdIslands(s, d)),
-    "agg_grouping_sets" -> (Relational.aggGroupingSets _),
-    "agg_median_price" -> (Relational.aggMedianPrice _),
-    "agg_nations_by_region" -> (Relational.aggNationsByRegion _),
-    "pivot_status_counts" -> (Relational.pivotStatusCounts _),
-    // relational: joins
-    "q3_top_revenue" -> (Relational.q3TopRevenue _),
-    "q5_local_supplier" -> (Relational.q5LocalSupplier _),
-    "q7_volume_shipping" -> (Relational.q7VolumeShipping _),
-    "q8_market_share" -> (Relational.q8MarketShare _),
-    "q10_returned_items" -> (Relational.q10ReturnedItems _),
-    "q14_promo_revenue" -> (Relational.q14PromoRevenue _),
-    "q18_large_orders" -> (Relational.q18LargeOrders _),
-    // TPC-H completion: the other 14 classic shapes (TpchShapes)
-    "q2_min_cost_supplier" -> (TpchShapes.q2MinCostSupplier _),
-    "q4_order_priority" -> (TpchShapes.q4OrderPriority _),
-    "q6_forecast_revenue" -> (TpchShapes.q6ForecastRevenue _),
-    "q9_product_profit" -> (TpchShapes.q9ProductProfit _),
-    "q11_important_stock" -> (TpchShapes.q11ImportantStock _),
-    "q12_ship_priority" -> (TpchShapes.q12ShipPriority _),
-    "q13_cust_order_dist" -> (TpchShapes.q13CustOrderDist _),
-    "q15_top_supplier" -> (TpchShapes.q15TopSupplier _),
-    "q16_part_supplier_cnt" -> (TpchShapes.q16PartSupplierCnt _),
-    "q17_small_qty_revenue" -> (TpchShapes.q17SmallQtyRevenue _),
-    "q19_disjunctive_revenue" -> (TpchShapes.q19DisjunctiveRevenue _),
-    "q20_excess_suppliers" -> (TpchShapes.q20ExcessSuppliers _),
-    "q21_waiting_supplier" -> (TpchShapes.q21WaitingSupplier _),
-    "q22_sales_opportunity" -> (TpchShapes.q22SalesOpportunity _),
-    "join_broadcast_dim" -> (Relational.joinBroadcastDim _),
-    "join_left_outer" -> (Relational.joinLeftOuter _),
-    "join_semi" -> (Relational.joinSemi _),
-    "join_anti" -> (Relational.joinAnti _),
-    "bucketed_join" -> (graft.plans.Bucketing.bucketedJoinDemo _),
-    "join_skew_salted" -> (graft.plans.SkewJoin.skewJoinDemo _),
-    "zorder_layout" -> (graft.plans.ZOrder.zorderLayout _),
-    // relational: windows / set ops / sort-limit / scan
-    "window_rank_orders" -> (Relational.windowRankOrders _),
-    "setop_union" -> (Relational.setopUnion _),
-    "setop_intersect" -> (Relational.setopIntersect _),
-    "setop_except" -> (Relational.setopExcept _),
-    "topk_orders" -> (Relational.topkOrders _),
-    "scan_filter_project" -> (Relational.scanFilterProject _),
-    "subquery_exists" -> (Relational.subqueryExists _),
-    "subquery_not_exists" -> (Relational.subqueryNotExists _),
-    "subquery_scalar_avg" -> (Relational.subqueryScalarAvg _),
-    "subquery_in" -> (Relational.subqueryIn _),
-    "subquery_not_in" -> (Relational.subqueryNotIn _),
-    "join_full_outer" -> (Relational.joinFullOuter _),
-    "join_fuzzy_name" -> (Relational.joinFuzzyName _),
-    "dedup_typo_pairs" -> (Relational.typoPairs _),
-    "window_distribution" -> (Relational.windowDistribution _),
-    "agg_monthly_revenue" -> (Relational.aggMonthlyRevenue _),
-    "profile_columns" -> (Relational.profileColumns _),
-    "integrity_checksum" -> (Relational.integrityChecksum _),
-    "order_cycle_time" -> (Relational.orderCycleTime _),
-    "ivm_refresh" -> (Relational.ivmRefresh _),
-    "stats_histogram" -> (Relational.statsHistogram _),
-    "attribution_last_touch" -> (EventQueries.attributionLastTouch _),
-    "sketch_quantile_rollup" -> (EventQueries.quantileRollup _),
-    "funnel_stages" -> (EventQueries.funnelStages _),
-    "snapshot_diff" -> (Relational.snapshotDiff _),
-    "join_explosion_check" -> (EventQueries.joinExplosionCheck _),
-    "stats_correlation" -> (Relational.statsCorrelation _),
-    "embed_quant_error" -> (EmbeddingQueries.quantErrorReport _),
-    "mixture_temperature_alloc" -> (Sampling.mixtureTemperatureAlloc _),
-    "sample_reservoir_per_key" -> ((s, d) => Sampling.reservoirPerKey(s, d)),
-    "compaction_plan" -> ((s, d) => graft.plans.Compaction.compactionPlan(s, d)),
-    "agg_string_concat" -> (Relational.aggStringConcat _),
-    "string_funcs" -> (Relational.stringFuncs _),
-    // time series / streaming duals
-    "window_tumbling_hourly" -> (EventQueries.tumblingHourly _),
-    "window_moving_avg" -> (EventQueries.movingAvg _),
-    "window_range_hour" -> (EventQueries.rangeLastHour _),
-    "window_lag_delta" -> (EventQueries.lagDelta _),
-    "sessionize_events" -> (EventQueries.sessionize _),
-    "asof_purchase" -> (EventQueries.asofPurchase _),
-    "asof_next_purchase" -> (EventQueries.asofNextPurchase _),
-    "asof_nearest" -> (EventQueries.asofNearest _),
-    "range_join_nearby" -> ((s, d) => EventQueries.rangeJoinNearby(s, d)),
-    "range_join_overlap" -> (EventQueries.rangeJoinOverlap _),
-    "events_gapfill_daily" -> (EventQueries.gapfillDaily _),
-    "events_funnel" -> (EventQueries.funnel _),
-    "events_dau_wau" -> (EventQueries.dauWau _),
-    "events_value_quantiles" -> (EventQueries.valueQuantiles _),
-    "events_json_props" -> (EventQueries.jsonProps _),
-    "scd2_history" -> (EventQueries.scd2History _),
-    "events_retention_cohorts" -> (EventQueries.retentionCohorts _),
-    "events_anomaly_zscore" -> (EventQueries.anomalyZscore _),
-    "cdc_latest_state" -> (EventQueries.cdcLatestState _),
-    "window_session_native" -> (EventQueries.sessionWindowNative _),
-    "events_value_quantiles_approx" ->
-      ((s, d) => EventQueries.valueQuantilesApproxAudit(s, d)),
-    "events_quantile_rank_audit" -> (EventQueries.quantileRankAudit _),
-    "events_markov_stationary" -> ((s, d) => EventQueries.markovStationary(s, d)),
-    "events_markov_attribution" -> ((s, d) => EventQueries.markovAttribution(s, d)),
-    "attribution_position" -> ((s, d) => EventQueries.attributionPosition(s, d)),
-    "events_growth_accounting" -> (EventQueries.growthAccounting _),
-    "events_markov_transitions" -> (EventQueries.markovTransitions _),
-    "events_markov_entropy" -> (EventQueries.markovEntropyRate _),
-    "events_time_weighted_avg" -> (EventQueries.timeWeightedAvg _),
-    "events_activity_streaks" -> (EventQueries.activityStreaks _),
-    "typed_group_stats" -> (EventQueries.typedGroupStats _),
-    "text_hash_features" -> (TextQueries.hashFeatures _),
-    "text_importance_dsir" -> ((s, d) => TextQueries.importanceDsir(s, d)),
-    "text_compression_ratio" -> (TextQueries.compressionAudit _),
-    "text_repeated_passages" -> (TextQueries.repeatedPassages _),
-    "agg_regr_slope" -> (Relational.aggRegrSlope _),
-    "agg_yoy_growth" -> (Relational.aggYoyGrowth _),
-    "customer_rfm" -> (Relational.customerRfm _),
-    "customer_rfm_approx" -> (Relational.customerRfmApproxAudit _),
-    "merge_upsert" -> (EventQueries.mergeUpsert _),
-    // graph analytics
-    "graph_pagerank" -> (GraphQueries.pagerank _),
-    "graph_ppr_walks" -> ((s, d) => GraphQueries.pprWalks(s, d)),
-    "graph_copurchase" -> (GraphQueries.copurchasePairs _),
-    "graph_triangles" -> ((s, d) => GraphQueries.triangleCount(s, d)),
-    // the beyond-broadcast spelling: same joins, hash-partitioned —
-    // same oracle, so the driver proves count equality between modes
-    "graph_triangles_partitioned" ->
-      ((s, d) => GraphQueries.triangleCount(s, d, broadcastAdj = false)),
-    "graph_khop_reach" -> ((s, d) => GraphQueries.khopReach(s, d)),
-    "graph_closeness_sampled" -> ((s, d) => GraphQueries.closenessSampled(s, d)),
-    "graph_sssp" -> ((s, d) => GraphQueries.ssspBounded(s, d)),
-    "graph_assortativity" -> (GraphQueries.assortativity _),
-    "graph_avg_neighbor_degree" -> (GraphQueries.avgNeighborDegree _),
-    "ts_hurst_rs" -> (TimeSeries.hurstRs _),
-    "graph_label_propagation" -> ((s, d) => GraphQueries.labelPropagation(s, d)),
-    "stats_gini_spend" -> (Relational.giniSpend _),
-    "stats_theil_nation" -> (Relational.theilNation _),
-    "stats_atkinson_mld" -> (Relational.atkinsonMld _),
-    "docs_pielou_evenness" -> (TextQueries.pielouEvenness _),
-    "docs_readability" -> (TextQueries.readability _),
-    "docs_source_jsd" -> ((s, d) => TextQueries.sourceJsd(s, d)),
-    "docs_length_histogram" -> (TextQueries.lengthHistogram _),
-    "events_hill_tail_index" -> ((s, d) => EventQueries.hillTailIndex(s, d)),
-    "events_interarrival" -> (EventQueries.interArrival _),
-    "events_hourly_profile" -> (EventQueries.hourlyProfile _),
-    "events_poisson_rate" -> (EventQueries.poissonRateTest _),
-    "stats_benford" -> (Governance.benford _),
-    "stats_jarque_bera" -> (Relational.jarqueBera _),
-    "stats_chi2_independence" -> (Relational.chi2Cells _),
-    "stats_cramers_v" -> (Relational.cramersV _),
-    "stats_g_test" -> (Relational.gTest _),
-    "stats_trimmed_mean" -> ((s, d) => Relational.trimmedMean(s, d)),
-    "stats_sign_test" -> (Relational.signTest _),
-    "stats_bowker_symmetry" -> (Relational.bowkerSymmetry _),
-    "stats_bh_adjust" -> (MultipleTesting.bhAdjust _),
-    "graph_reciprocity" -> (Relational.reciprocity _),
-    "text_ngram_novelty" -> (TextQueries.ngramNovelty _),
-    "text_zipf_slope" -> ((s, d) => TextQueries.zipfSlope(s, d)),
-    // time series
-    "ts_seasonal_decompose" -> (TimeSeries.seasonalDecompose _),
-    "ts_changepoint_cusum" -> (TimeSeries.cusumChangepoint _),
-    "ts_peaks" -> ((s, d) => TimeSeries.peaks(s, d)),
-    "ts_autocorrelation" -> (TimeSeries.autocorrelation _),
-    "ts_ljung_box" -> ((s, d) => TimeSeries.ljungBox(s, d)),
-    "ts_pacf" -> (TimeSeries.pacf _),
-    "ts_cross_correlation" -> (TimeSeries.crossCorrelation _),
-    "ts_granger_lag1" -> (TimeSeries.grangerLag1 _),
-    "ts_permutation_entropy" -> (TimeSeries.permutationEntropy _),
-    "ts_sample_entropy" -> (TimeSeries.sampleEntropy _),
-    "ts_dickey_fuller" -> (TimeSeries.dickeyFuller _),
-    "ts_pettitt" -> (TimeSeries.pettitt _),
-    "ts_ewma" -> ((s, d) => TimeSeries.ewma(s, d)),
-    "ts_holt_linear" -> ((s, d) => TimeSeries.holtLinear(s, d)),
-    "ts_rolling_median" -> (TimeSeries.rollingMedian _),
-    "ts_forecast_backtest" -> ((s, d) => TimeSeries.forecastBacktest(s, d)),
-    "ts_stl_anomaly" -> ((s, d) => TimeSeries.stlAnomaly(s, d)),
-    "stats_dispersion_index" -> (TimeSeries.dispersionIndex _),
-    "drift_qq_deciles" -> (Drift.qqDeciles _),
-    "ab_conversion_ztest" -> ((s, d) => Drift.abConversion(s, d)),
-    "ab_cuped_revenue" -> (Drift.abCuped _),
-    "ab_permutation_test" -> ((s, d) => Drift.abPermutationTest(s, d)),
-    "ab_power_mde" -> ((s, d) => Drift.abPowerMde(s, d)),
-    "ab_srm_check" -> (Drift.abSrmCheck _),
-    "ab_delta_ratio_ci" -> (Drift.abDeltaRatio _),
-    "eval_brier_score" -> (Evaluation.brierScore _),
-    "eval_score_agreement" -> (Evaluation.scoreAgreement _),
-    "stats_hodges_lehmann" -> (TimeSeries.hodgesLehmann _),
-    "stats_page_trend" -> (Drift.pageTrend _),
-    "events_wilson_ci" -> (EventQueries.wilsonCi _),
-    "drift_cvm" -> (Drift.cvm _),
-    "stats_ansari_bradley" -> (Drift.ansariBradley _),
-    "ts_holt_winters" -> ((s, d) => TimeSeries.holtWinters(s, d)),
-    "events_rfm_migration" -> (EventQueries.rfmMigration _),
-    "drift_effect_size" -> (Drift.effectSize _),
-    "pii_reid_risk" -> ((s, d) => Governance.reidRisk(s, d)),
-    "eval_pr_threshold_sweep" -> (Evaluation.prThresholdSweep _),
-    "ts_seasonal_strength" -> (TimeSeries.seasonalStrength _),
-    "stats_power_law_alpha" -> (EventQueries.powerLawAlpha _),
-    "ts_theil_sen" -> (TimeSeries.theilSen _),
-    "survival_km" -> (Survival.kaplanMeier _),
-    "survival_nelson_aalen" -> (Survival.nelsonAalen _),
-    "survival_aalen_johansen" -> ((s, d) => Survival.aalenJohansen(s, d)),
-    "survival_logrank" -> (Survival.logRank _),
-    "survival_rmst" -> ((s, d) => Survival.rmst(s, d)),
-    "survival_life_table" -> ((s, d) => Survival.lifeTable(s, d)),
-    "survival_hazard_ratio" -> (Survival.hazardRatio _),
-    "stats_ks_uniform_weekday" -> (Relational.ksUniformWeekday _),
-    "stats_decile_lift" -> (Relational.decileLift _),
-    "events_max_concurrency" -> (EventQueries.maxConcurrency _),
-    "cohort_ltv" -> (Relational.cohortLtv _),
-    "basket_rules" -> ((s, d) => GraphQueries.basketRules(s, d)),
-    "events_session_paths" -> (EventQueries.sessionPaths _),
-    "drift_welch_ttest" -> (Drift.welchTTest _),
-    "events_reach_curve" -> (EventQueries.reachCurve _),
-    "stats_histogram_eqdepth" -> (Relational.statsHistogramEqdepth _),
-    "embed_outliers" -> ((s, d) => EmbeddingQueries.outliersByLabel(s, d)),
-    "stats_anova_priority" -> (Relational.anovaPriority _),
-    "stats_levene" -> (Relational.levenePriority _),
-    "stats_mcnemar" -> (Relational.mcnemarYears _),
-    "stats_wilcoxon_signed" -> (Drift.wilcoxonSignedRank _),
-    "stats_friedman" -> (Drift.friedman _),
-    "stats_cochran_armitage" -> (Relational.cochranArmitage _),
-    "stats_kruskal_wallis" -> (Relational.kruskalWallis _),
-    "stats_dunn_pairs" -> (Relational.dunnPairs _),
-    "stats_tukey_hsd" -> (Relational.tukeyHsd _),
-    "stats_bartlett" -> (Relational.bartlett _),
-    "stats_mood_median" -> (Relational.moodMedian _),
-    "eval_roc_auc" -> (Evaluation.rocAuc _),
-    "eval_average_precision" -> (Evaluation.averagePrecision _),
-    "eval_calibration" -> (Evaluation.calibration _),
-    "eval_self_retrieval_mrr" -> ((s, d) => Evaluation.selfRetrievalMrr(s, d)),
-    "eval_ndcg" -> ((s, d) => Evaluation.ndcg(s, d)),
-    "text_jsd_langs" -> ((s, d) => TextQueries.jsdLangs(s, d)),
-    "docs_simpson_diversity" -> (TextQueries.simpsonDiversity _),
-    "docs_hapax_share" -> (TextQueries.hapaxShare _),
-    "docs_yule_k" -> (TextQueries.yuleK _),
-    "docs_mattr" -> ((s, d) => TextQueries.mattr(s, d)),
-    "text_gopher_repetition" -> (TextQueries.gopherRepetition _),
-    "text_good_turing" -> ((s, d) => TextQueries.goodTuring(s, d)),
-    "text_word_burstiness" -> ((s, d) => TextQueries.wordBurstiness(s, d)),
-    "text_langid_prf" -> (TextQueries.langIdPrf _),
-    "stats_cohens_kappa" -> (TextQueries.cohensKappa _),
-    "docs_heaps_law" -> ((s, d) => TextQueries.heapsLaw(s, d)),
-    "events_burstiness" -> (EventQueries.burstiness _),
-    "ts_mann_kendall" -> (TimeSeries.mannKendall _),
-    "ts_seasonal_mann_kendall" -> (TimeSeries.seasonalMannKendall _),
-    "events_unattributed" -> (EventQueries.unattributedPurchases _),
-    "graph_kcore" -> ((s, d) => GraphQueries.kcorePeel(s, d)),
-    "stats_hhi_nation" -> (Relational.hhiNation _),
-    "events_user_entropy" -> (EventQueries.userEntropy _),
-    "stats_mutual_info" -> (EventQueries.mutualInfo _),
-    "sample_poisson_bootstrap" -> ((s, d) => Sampling.poissonBootstrap(s, d)),
-    "text_doc_keywords" -> ((s, d) => TextQueries.docKeywords(s, d)),
-    "ts_runs_test" -> (TimeSeries.runsTest _),
-    "ts_spearman" -> (TimeSeries.spearmanDaily _),
-    "ts_kendall_tau" -> (TimeSeries.kendallTau _),
-    "ts_turning_points" -> (TimeSeries.turningPoints _),
-    "ts_variance_ratio" -> ((s, d) => TimeSeries.varianceRatio(s, d)),
-    "graph_clustering_coeff" -> (GraphQueries.clusteringCoeff _),
-    "graph_link_jaccard" -> ((s, d) => GraphQueries.linkJaccard(s, d)),
-    // beyond-broadcast twin: adjacency consumed via shuffled hash
-    // joins — same oracle, so the driver proves mode equality
-    "graph_link_jaccard_partitioned" ->
-      ((s, d) => GraphQueries.linkJaccard(s, d, 20, broadcastAdj = false)),
-    "graph_resource_alloc" -> ((s, d) => GraphQueries.resourceAlloc(s, d)),
-    "graph_resource_alloc_partitioned" ->
-      ((s, d) => GraphQueries.resourceAlloc(s, d, 20, broadcastAdj = false)),
-    "graph_adamic_adar" -> ((s, d) => GraphQueries.adamicAdar(s, d)),
-    "graph_adamic_adar_partitioned" ->
-      ((s, d) => GraphQueries.adamicAdar(s, d, 20, broadcastAdj = false)),
-    "graph_common_neighbors" -> ((s, d) => GraphQueries.commonNeighbors(s, d)),
-    "graph_pref_attachment" -> ((s, d) => GraphQueries.prefAttachment(s, d)),
-    "graph_katz_walks" -> ((s, d) => GraphQueries.katzWalks(s, d)),
-    "graph_degree_histogram" -> (GraphQueries.degreeHistogram _),
-    "graph_rich_club" -> (GraphQueries.richClub _),
-    "graph_local_bridges" -> ((s, d) => GraphQueries.localBridges(s, d)),
-    "graph_hits_walks" -> ((s, d) => GraphQueries.hitsWalks(s, d)),
-    "dedup_containment" -> ((s, d) => TextQueries.dedupContainment(s, d)),
-    "drift_mann_whitney" -> (Drift.mannWhitney _),
-    "events_funnel_within" -> ((s, d) => EventQueries.funnelWithin(s, d)),
-    "unpivot_metrics" -> (Relational.unpivotMetrics _),
-    "stats_weighted_median" -> (Relational.weightedMedian _),
-    "governance_delete_impact" -> (Governance.deleteImpact _),
-    "text_vocab_coverage" -> ((s, d) => TextQueries.vocabCoverage(s, d)),
-    // dataset governance
-    "dq_expectations" -> (Governance.dqExpectations _),
-    "pii_k_anonymity" -> ((s, d) => Governance.kAnonymity(s, d)),
-    "pii_l_diversity" -> ((s, d) => Governance.lDiversity(s, d)),
-    "pii_t_closeness" -> ((s, d) => Governance.tCloseness(s, d)),
-    "split_leakage_audit" -> (Governance.splitLeakageAudit _),
-    "pareto_frontier" -> (Governance.paretoFrontier _),
-    "winsorize_stats" -> (Governance.winsorizeStats _),
-    "split_balance_chisq" -> (Governance.splitBalanceChisq _),
-    "embed_hard_negatives" -> ((s, d) => EmbeddingQueries.hardNegatives(s, d)),
-    "join_size_estimate" -> (EventQueries.joinSizeEstimateAudit _),
-    "drift_psi" -> ((s, d) => Drift.psi(s, d)),
-    "drift_ks" -> (Drift.ks _),
-    "graph_modularity" -> (GraphQueries.modularity _),
-    "attribution_time_decay" -> (EventQueries.attributionTimeDecay _),
-    "dq_functional_deps" -> (Governance.functionalDeps _),
-    "pii_dp_release" -> (Governance.dpRelease _),
-    "corpus_datacard" -> (Governance.datacard _),
-    // text analysis
-    "text_token_count" -> (TextQueries.tokenCount _),
-    "text_token_bpeish" -> (TextQueries.tokenCountBpe _),
-    "text_tokenizer_fertility" -> (TextQueries.tokenizerFertility _),
-    "text_ngram_diversity" -> (TextQueries.ngramDiversity _),
-    "text_winnow_fp" -> (TextQueries.winnowFingerprint _),
-    "text_stats_by_lang" -> (TextQueries.statsByLang _),
-    "text_quality_score" -> (TextQueries.qualityScore _),
-    "text_quality_funnel" -> (TextQueries.qualityFunnel _),
-    "text_char_entropy" -> (TextQueries.charEntropy _),
-    "text_bigram_entropy_rate" -> (TextQueries.bigramEntropyRate _),
-    "text_vocab_overlap" -> ((s, d) => TextQueries.vocabOverlap(s, d)),
-    "docs_length_ks_pairs" -> (TextQueries.lengthKsPairs _),
-    "text_lang_guess" -> (TextQueries.langGuessConfusion _),
-    "text_fingerprint" -> (TextQueries.fingerprint _),
-    "text_scrub_pii" -> (TextQueries.scrubPii _),
-    "text_repetition" -> (TextQueries.repetitionStats _),
-    "text_top_terms" -> (TextQueries.topTermsByDf _),
-    "text_regex_extract" -> (TextQueries.regexExtract _),
-    "text_first_positions" -> (TextQueries.firstPositions _),
-    "dedup_incremental" -> (TextQueries.dedupIncremental _),
-    "text_bigrams" -> (TextQueries.bigrams _),
-    "text_bigram_pmi" -> ((s, d) => TextQueries.bigramPmi(s, d)),
-    "text_trigram_lm" -> (TextQueries.trigramLm _),
-    "docs_source_concentration" -> (TextQueries.sourceConcentration _),
-    "text_normalize" -> (TextQueries.normalizeText _),
-    "docs_chunk_sliding" -> (TextQueries.chunkSliding _),
-    "text_bm25_terms" -> (TextQueries.bm25TopTerms _),
-    "index_inverted" -> (TextQueries.invertedIndex _),
-    "sketch_word_freq" -> (TextQueries.sketchWordFreqAudit _),
-    "curation_pipeline" -> (TextQueries.curationPipeline _),
-    "text_bpe_merge" -> (TextQueries.bpeMergeStep _),
-    "text_bpe_train" -> ((s, d) => TextQueries.bpeTrain(s, d)),
-    "text_bpe_encode" -> ((s, d) => TextQueries.bpeEncodeAudit(s, d)),
-    "text_perplexity" -> (TextQueries.perplexity _),
-    "text_ccnet_buckets" -> (TextQueries.ccnetBuckets _),
-    "text_tfidf_terms" -> (TextQueries.tfidfTerms _),
-    "events_value_mad" -> (EventQueries.valueMad _),
-    "events_value_mad_approx" ->
-      ((s, d) => EventQueries.valueMadApproxAudit(s, d)),
-    "sketch_hll_rollup" -> (EventQueries.hllRollupAudit _),
-    "sketch_hll_intersect" -> (EventQueries.hllIntersectAudit _),
-    "sketch_topk_rollup" -> ((s, d) => EventQueries.topkRollupAudit(s, d)),
-    // dataset management: deterministic splits / samples / skew diagnosis
-    "sample_hash_split" -> (Sampling.hashSplit _),
-    "sample_stratified" -> (Sampling.stratifiedSample _),
-    "sample_systematic" -> (Sampling.systematicSample _),
-    "sample_weighted" -> ((s, d) => Sampling.weightedSample(s, d)),
-    "sample_neyman_allocation" -> ((s, d) => Sampling.neymanAllocation(s, d)),
-    "events_skew_histogram" -> (Sampling.skewHistogram _),
-    "decontaminate_ngram" -> (Sampling.decontaminate _),
-    "decontaminate_bloom" -> (Sampling.decontaminateBloomAudit _),
-    "pack_chunks" -> ((s, d) => Sampling.packChunks(s, d)),
-    "mixture_downsample" -> (Sampling.mixtureDownsample _),
-    // dedup
-    "dedup_exact" -> (TextQueries.dedupExact _),
-    "dedup_exact_paragraph" -> ((s, d) => TextQueries.dedupExactParagraph(s, d)),
-    "dedup_paragraph_top" -> ((s, d) => TextQueries.dedupParagraphTop(s, d)),
-    "dedup_paragraph_savings" -> ((s, d) => TextQueries.dedupParagraphSavings(s, d)),
-    "dedup_exact_substring" -> ((s, d) => TextQueries.exactSubstringDedup(s, d)),
-    "dedup_cluster_sizes" -> (TextQueries.dedupClusterSizes _),
-    "dedup_ngram_jaccard" -> ((s, d) => TextQueries.dedupNgramJaccard(s, d)),
-    "dedup_prefix_jaccard" -> ((s, d) => TextQueries.dedupPrefixJaccard(s, d)),
-    "dedup_components" -> (graft.llm.DedupClusters.dedupComponents _),
-    "dedup_keep_best" -> (graft.llm.DedupClusters.dedupKeepBest _),
-    "dedup_minhash_lsh" -> ((s, d) => MinHashDedup.nearDupPairsAudit(s, d)),
-    "dedup_lsh_bucket_audit" ->
-      ((s, d) => MinHashDedup.bucketConservationAudit(s, d)),
-    "dedup_minhash_signatures" -> (MinHashDedup.signatureAudit _),
-    "dedup_simhash" -> ((s, d) => SimHashDedup.nearDupPairsAudit(s, d)),
-    // similarity search
-    "ann_topk_cosine" -> (EmbeddingQueries.annTopK _),
-    "embed_intrinsic_dim" -> ((s, d) => EmbeddingQueries.intrinsicDim(s, d)),
-    "ann_topk_cosine_i8" -> ((s, d) => EmbeddingQueries.annTopKI8(s, d)),
-    "ann_ivf_topk" -> ((s, d) => EmbeddingQueries.annIvfAudit(s, d)),
-    "ann_pq_topk" -> ((s, d) => EmbeddingQueries.annPqAudit(s, d)),
-    "ann_ivfpq_topk" -> ((s, d) => EmbeddingQueries.annIvfPqAudit(s, d)),
-    "embed_neardup_lsh" -> ((s, d) => EmbeddingQueries.nearDupLshAudit(s, d)),
-    "embed_knn_graph" -> ((s, d) => EmbeddingQueries.knnGraph(s, d)),
-    "embed_mmr_topk" -> ((s, d) => EmbeddingQueries.mmrTopK(s, d)),
-    "embed_semdedup" -> ((s, d) => EmbeddingQueries.semDedupAudit(s, d)),
-    "embed_centroid_by_label" -> (EmbeddingQueries.centroidByLabel _),
-    "embed_silhouette" -> (EmbeddingQueries.silhouette _),
-    "embed_norm_quantiles" -> (EmbeddingQueries.normQuantilesByLabel _),
-    "embed_dim_ablation" -> (EmbeddingQueries.dimAblation _),
-    "embed_threshold_sweep" -> (EmbeddingQueries.thresholdSweep _),
-    "embed_pca_project" -> ((s, d) => EmbeddingQueries.pcaProjectAudit(s, d)),
-    "embed_pca_explained" -> ((s, d) => EmbeddingQueries.pcaExplainedAudit(s, d)),
-    // multimodal
-    "multimodal_meta" -> (Multimodal.mediaMeta _),
-    "multimodal_dedup" -> (Multimodal.mediaDedup _),
-    "multimodal_cdc_chunks" -> ((s, d) => Multimodal.cdcChunkAudit(s, d)),
-    "multimodal_cdc_pairs" -> ((s, d) => Multimodal.cdcPairsAudit(s, d)),
-    "multimodal_decode_stub" -> (Multimodal.decodeFrames _),
-    "multimodal_frame_sample" -> ((s, d) => Multimodal.sampleFrames(s, d)),
-  )
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+  /** One registered query: its `name` (the bench row key and the Verify
+    * dump directory), its DataFrame `build` over the test tables in a
+    * scale-factor dir, its `oracle` (equivalent ANSI SQL that DuckDB runs
+    * on the same parquet; `None` for a rows-only entry) and how `Bench`
+    * warms its generated code before the timed run.
     *
     * ==Why each rows-only entry has no oracle (permanent adjudications)==
     *
-    * Every `queries` key absent here is rows-only BY DESIGN, for one of
+    * Every record with `oracle = None` is rows-only BY DESIGN, for one of
     * five reasons, and each is pinned by a named spec instead:
     *
     *  1. '''Sketch registers are engine-specific''' — DataSketches HLL /
@@ -738,383 +330,707 @@ object SparkEntry {
     *     [[graft.queries.TextQueries.compressionRatio]] stays the
     *     per-doc API, CompressionSpec-pinned).
     */
-  def oracleSql: Map[String, String] = Map(
-    "dolar_parity" -> dolarParitySql,
-    "dolar_e2e_interval" -> dolarE2eSql,
-    "dolar_e2e_stream" -> dolarE2eSql,
-    "interval_events" -> EventQueries.intervalEventsSql,
-    "q1_pricing_summary" -> Relational.q1PricingSummarySql,
-    "agg_orders_by_priority" -> Relational.aggOrdersByPrioritySql,
-    "agg_cube" -> Relational.aggCubeSql,
-    "agg_rollup" -> Relational.aggRollupSql,
-    "agg_count_distinct" -> Relational.aggCountDistinctSql,
-    "agg_minmax_by_brand" -> Relational.aggMinMaxByBrandSql,
-    "agg_mode_by_brand" -> Relational.modeByBrandSql,
-    "agg_geomean_by_brand" -> Relational.geomeanByBrandSql,
-    "agg_skew_kurtosis" -> Relational.skewKurtosisByBrandSql,
-    "stats_quantiles_exact" -> Relational.quantilesExactSql,
-    "seq_gap_islands" -> Relational.eventIdIslandsSql,
-    "agg_grouping_sets" -> Relational.aggGroupingSetsSql,
-    "agg_median_price" -> Relational.aggMedianPriceSql,
-    "agg_nations_by_region" -> Relational.aggNationsByRegionSql,
-    "pivot_status_counts" -> Relational.pivotStatusCountsSql,
-    "q3_top_revenue" -> Relational.q3TopRevenueSql,
-    "q5_local_supplier" -> Relational.q5LocalSupplierSql,
-    "q7_volume_shipping" -> Relational.q7VolumeShippingSql,
-    "q8_market_share" -> Relational.q8MarketShareSql,
-    "q10_returned_items" -> Relational.q10ReturnedItemsSql,
-    "q14_promo_revenue" -> Relational.q14PromoRevenueSql,
-    "q18_large_orders" -> Relational.q18LargeOrdersSql,
-    "q2_min_cost_supplier" -> TpchShapes.q2MinCostSupplierSql,
-    "q4_order_priority" -> TpchShapes.q4OrderPrioritySql,
-    "q6_forecast_revenue" -> TpchShapes.q6ForecastRevenueSql,
-    "q9_product_profit" -> TpchShapes.q9ProductProfitSql,
-    "q11_important_stock" -> TpchShapes.q11ImportantStockSql,
-    "q12_ship_priority" -> TpchShapes.q12ShipPrioritySql,
-    "q13_cust_order_dist" -> TpchShapes.q13CustOrderDistSql,
-    "q15_top_supplier" -> TpchShapes.q15TopSupplierSql,
-    "q16_part_supplier_cnt" -> TpchShapes.q16PartSupplierCntSql,
-    "q17_small_qty_revenue" -> TpchShapes.q17SmallQtyRevenueSql,
-    "q19_disjunctive_revenue" -> TpchShapes.q19DisjunctiveRevenueSql,
-    "q20_excess_suppliers" -> TpchShapes.q20ExcessSuppliersSql,
-    "q21_waiting_supplier" -> TpchShapes.q21WaitingSupplierSql,
-    "q22_sales_opportunity" -> TpchShapes.q22SalesOpportunitySql,
-    "join_broadcast_dim" -> Relational.joinBroadcastDimSql,
-    "join_left_outer" -> Relational.joinLeftOuterSql,
-    "join_semi" -> Relational.joinSemiSql,
-    "join_anti" -> Relational.joinAntiSql,
-    "bucketed_join" -> graft.plans.Bucketing.bucketedJoinDemoSql,
-    "join_skew_salted" -> graft.plans.SkewJoin.skewJoinDemoSql,
-    "zorder_layout" -> graft.plans.ZOrder.zorderLayoutSql,
-    "window_rank_orders" -> Relational.windowRankOrdersSql,
-    "setop_union" -> Relational.setopUnionSql,
-    "setop_intersect" -> Relational.setopIntersectSql,
-    "setop_except" -> Relational.setopExceptSql,
-    "topk_orders" -> Relational.topkOrdersSql,
-    "scan_filter_project" -> Relational.scanFilterProjectSql,
-    "subquery_exists" -> Relational.subqueryExistsSql,
-    "subquery_not_exists" -> Relational.subqueryNotExistsSql,
-    "subquery_scalar_avg" -> Relational.subqueryScalarAvgSql,
-    "subquery_in" -> Relational.subqueryInSql,
-    "subquery_not_in" -> Relational.subqueryNotInSql,
-    "join_full_outer" -> Relational.joinFullOuterSql,
-    "join_fuzzy_name" -> Relational.joinFuzzyNameSql,
-    "dedup_typo_pairs" -> Relational.typoPairsSql,
-    "window_distribution" -> Relational.windowDistributionSql,
-    "agg_monthly_revenue" -> Relational.aggMonthlyRevenueSql,
-    "profile_columns" -> Relational.profileColumnsSql,
-    "integrity_checksum" -> Relational.integrityChecksumSql,
-    "order_cycle_time" -> Relational.orderCycleTimeSql,
-    "ivm_refresh" -> Relational.ivmRefreshSql,
-    "stats_histogram" -> Relational.statsHistogramSql,
-    "attribution_last_touch" -> EventQueries.attributionLastTouchSql,
-    "sketch_quantile_rollup" -> EventQueries.quantileRollupSql,
-    "sketch_word_freq" -> TextQueries.sketchWordFreqAuditSql,
-    "funnel_stages" -> EventQueries.funnelStagesSql,
-    "snapshot_diff" -> Relational.snapshotDiffSql,
-    "join_explosion_check" -> EventQueries.joinExplosionCheckSql,
-    "join_size_estimate" -> EventQueries.joinSizeEstimateAuditSql,
-    "stats_correlation" -> Relational.statsCorrelationSql,
-    "embed_quant_error" -> EmbeddingQueries.quantErrorReportSql,
-    "mixture_temperature_alloc" -> Sampling.mixtureTemperatureAllocSql,
-    "sample_reservoir_per_key" -> Sampling.reservoirPerKeySql,
-    "agg_string_concat" -> Relational.aggStringConcatSql,
-    "string_funcs" -> Relational.stringFuncsSql,
-    "window_tumbling_hourly" -> EventQueries.tumblingHourlySql,
-    "window_moving_avg" -> EventQueries.movingAvgSql,
-    "window_lag_delta" -> EventQueries.lagDeltaSql,
-    "sessionize_events" -> EventQueries.sessionizeSql,
-    "asof_purchase" -> EventQueries.asofPurchaseSql,
-    "asof_next_purchase" -> EventQueries.asofNextPurchaseSql,
-    "asof_nearest" -> EventQueries.asofNearestSql,
-    "range_join_nearby" -> EventQueries.rangeJoinNearbySql,
-    "range_join_overlap" -> EventQueries.rangeJoinOverlapSql,
-    "events_gapfill_daily" -> EventQueries.gapfillDailySql,
-    "cdc_latest_state" -> EventQueries.cdcLatestStateSql,
-    "text_token_count" -> TextQueries.tokenCountSql,
-    "text_token_bpeish" -> TextQueries.tokenCountBpeSql,
-    "text_tokenizer_fertility" -> TextQueries.tokenizerFertilitySql,
-    "text_ngram_diversity" -> TextQueries.ngramDiversitySql,
-    "text_winnow_fp" -> TextQueries.winnowFingerprintSql,
-    "text_stats_by_lang" -> TextQueries.statsByLangSql,
-    "text_quality_score" -> TextQueries.qualityScoreSql,
-    "text_quality_funnel" -> TextQueries.qualityFunnelSql,
-    "text_char_entropy" -> TextQueries.charEntropySql,
-    "text_bigram_entropy_rate" -> TextQueries.bigramEntropyRateSql,
-    "text_vocab_overlap" -> TextQueries.vocabOverlapSql(),
-    "docs_length_ks_pairs" -> TextQueries.lengthKsPairsSql,
-    "text_lang_guess" -> TextQueries.langGuessConfusionSql,
-    "text_fingerprint" -> TextQueries.fingerprintSql,
-    "text_scrub_pii" -> TextQueries.scrubPiiSql,
-    "text_repetition" -> TextQueries.repetitionStatsSql,
-    "text_top_terms" -> TextQueries.topTermsByDfSql,
-    "text_regex_extract" -> TextQueries.regexExtractSql,
-    "text_first_positions" -> TextQueries.firstPositionsSql,
-    "dedup_incremental" -> TextQueries.dedupIncrementalSql,
-    "text_bigrams" -> TextQueries.bigramsSql,
-    "text_bigram_pmi" -> TextQueries.bigramPmiSql(),
-    "text_trigram_lm" -> TextQueries.trigramLmSql,
-    "docs_source_concentration" -> TextQueries.sourceConcentrationSql,
-    "window_range_hour" -> EventQueries.rangeLastHourSql,
-    "text_bm25_terms" -> TextQueries.bm25TopTermsSql,
-    "index_inverted" -> TextQueries.invertedIndexSql,
-    "curation_pipeline" -> TextQueries.curationPipelineSql,
-    "sample_hash_split" -> Sampling.hashSplitSql,
-    "sample_stratified" -> Sampling.stratifiedSampleSql,
-    "sample_systematic" -> Sampling.systematicSampleSql,
-    "sample_weighted" -> Sampling.weightedSampleSql,
-    "sample_neyman_allocation" -> Sampling.neymanAllocationSql,
-    "events_skew_histogram" -> Sampling.skewHistogramSql,
-    "events_funnel" -> EventQueries.funnelSql,
-    "events_dau_wau" -> EventQueries.dauWauSql,
-    "events_value_quantiles" -> EventQueries.valueQuantilesSql,
-    "events_json_props" -> EventQueries.jsonPropsSql,
-    "scd2_history" -> EventQueries.scd2HistorySql,
-    "events_retention_cohorts" -> EventQueries.retentionCohortsSql,
-    "events_anomaly_zscore" -> EventQueries.anomalyZscoreSql,
-    "window_session_native" -> EventQueries.sessionWindowNativeSql,
-    "events_markov_stationary" -> EventQueries.markovStationarySql(),
-    "events_markov_attribution" -> EventQueries.markovAttributionSql(),
-    "attribution_position" -> EventQueries.attributionPositionSql(),
-    "events_growth_accounting" -> EventQueries.growthAccountingSql,
-    "events_markov_transitions" -> EventQueries.markovTransitionsSql,
-    "events_markov_entropy" -> EventQueries.markovEntropyRateSql,
-    "events_quantile_rank_audit" -> EventQueries.quantileRankAuditSql,
-    "events_time_weighted_avg" -> EventQueries.timeWeightedAvgSql,
-    "events_activity_streaks" -> EventQueries.activityStreaksSql,
-    "typed_group_stats" -> EventQueries.typedGroupStatsSql,
-    "text_hash_features" -> TextQueries.hashFeaturesSql,
-    "text_importance_dsir" -> TextQueries.importanceDsirSql,
-    "agg_regr_slope" -> Relational.aggRegrSlopeSql,
-    "text_repeated_passages" -> TextQueries.repeatedPassagesSql,
-    "agg_yoy_growth" -> Relational.aggYoyGrowthSql,
-    "customer_rfm" -> Relational.customerRfmSql,
-    "graph_pagerank" -> GraphQueries.pagerankSql,
-    "graph_ppr_walks" -> GraphQueries.pprWalksSql,
-    "graph_copurchase" -> GraphQueries.copurchasePairsSql,
-    "graph_triangles" -> GraphQueries.triangleCountSql,
-    "graph_triangles_partitioned" -> GraphQueries.triangleCountSql,
-    "graph_khop_reach" -> GraphQueries.khopReachSql,
-    "graph_closeness_sampled" -> GraphQueries.closenessSampledSql,
-    "graph_sssp" -> GraphQueries.ssspBoundedSql,
-    "graph_assortativity" -> GraphQueries.assortativitySql,
-    "graph_avg_neighbor_degree" -> GraphQueries.avgNeighborDegreeSql,
-    "ts_hurst_rs" -> TimeSeries.hurstRsSql,
-    "graph_label_propagation" -> GraphQueries.labelPropagationSql,
-    "stats_gini_spend" -> Relational.giniSpendSql,
-    "stats_theil_nation" -> Relational.theilNationSql,
-    "stats_atkinson_mld" -> Relational.atkinsonMldSql,
-    "docs_pielou_evenness" -> TextQueries.pielouEvennessSql,
-    "docs_readability" -> TextQueries.readabilitySql,
-    "docs_source_jsd" -> TextQueries.sourceJsdSql(),
-    "docs_length_histogram" -> TextQueries.lengthHistogramSql,
-    "events_hill_tail_index" -> EventQueries.hillTailIndexSql(),
-    "events_interarrival" -> EventQueries.interArrivalSql,
-    "events_hourly_profile" -> EventQueries.hourlyProfileSql,
-    "events_poisson_rate" -> EventQueries.poissonRateTestSql,
-    "stats_benford" -> Governance.benfordSql,
-    "stats_jarque_bera" -> Relational.jarqueBeraSql,
-    "stats_chi2_independence" -> Relational.chi2CellsSql,
-    "stats_cramers_v" -> Relational.cramersVSql,
-    "stats_g_test" -> Relational.gTestSql,
-    "stats_trimmed_mean" -> Relational.trimmedMeanSql(),
-    "stats_sign_test" -> Relational.signTestSql,
-    "stats_bowker_symmetry" -> Relational.bowkerSymmetrySql,
-    "stats_bh_adjust" -> MultipleTesting.bhAdjustSql,
-    "graph_reciprocity" -> Relational.reciprocitySql,
-    "text_ngram_novelty" -> TextQueries.ngramNoveltySql,
-    "text_zipf_slope" -> TextQueries.zipfSlopeSql,
-    "ts_seasonal_decompose" -> TimeSeries.seasonalDecomposeSql,
-    "ts_changepoint_cusum" -> TimeSeries.cusumChangepointSql,
-    "ts_peaks" -> TimeSeries.peaksSql,
-    "ts_autocorrelation" -> TimeSeries.autocorrelationSql,
-    "ts_ljung_box" -> TimeSeries.ljungBoxSql,
-    "ts_pacf" -> TimeSeries.pacfSql,
-    "ts_cross_correlation" -> TimeSeries.crossCorrelationSql,
-    "ts_granger_lag1" -> TimeSeries.grangerLag1Sql,
-    "ts_permutation_entropy" -> TimeSeries.permutationEntropySql,
-    "ts_sample_entropy" -> TimeSeries.sampleEntropySql,
-    "ts_dickey_fuller" -> TimeSeries.dickeyFullerSql,
-    "ts_pettitt" -> TimeSeries.pettittSql,
-    "ts_ewma" -> TimeSeries.ewmaSql(),
-    "ts_holt_linear" -> TimeSeries.holtLinearSql(),
-    "ts_rolling_median" -> TimeSeries.rollingMedianSql,
-    "ts_forecast_backtest" -> TimeSeries.forecastBacktestSql(),
-    "ts_stl_anomaly" -> TimeSeries.stlAnomalySql(),
-    "stats_dispersion_index" -> TimeSeries.dispersionIndexSql,
-    "drift_qq_deciles" -> Drift.qqDecilesSql,
-    "ab_conversion_ztest" -> Drift.abConversionSql(),
-    "ab_cuped_revenue" -> Drift.abCupedSql,
-    "ab_permutation_test" -> Drift.abPermutationTestSql(),
-    "ab_power_mde" -> Drift.abPowerMdeSql(),
-    "ab_srm_check" -> Drift.abSrmCheckSql,
-    "ab_delta_ratio_ci" -> Drift.abDeltaRatioSql,
-    "eval_brier_score" -> Evaluation.brierScoreSql,
-    "eval_score_agreement" -> Evaluation.scoreAgreementSql,
-    "stats_hodges_lehmann" -> TimeSeries.hodgesLehmannSql,
-    "stats_page_trend" -> Drift.pageTrendSql,
-    "events_wilson_ci" -> EventQueries.wilsonCiSql,
-    "drift_cvm" -> Drift.cvmSql,
-    "stats_ansari_bradley" -> Drift.ansariBradleySql,
-    "ts_holt_winters" -> TimeSeries.holtWintersSql(),
-    "events_rfm_migration" -> EventQueries.rfmMigrationSql,
-    "agg_approx_distinct" -> Relational.aggApproxDistinctAuditSql,
-    "customer_rfm_approx" -> Relational.customerRfmApproxAuditSql,
-    "sketch_hll_rollup" -> EventQueries.hllRollupAuditSql,
-    "sketch_hll_intersect" -> EventQueries.hllIntersectAuditSql,
-    "sketch_topk_rollup" -> EventQueries.topkRollupAuditSql,
-    "drift_effect_size" -> Drift.effectSizeSql,
-    "pii_reid_risk" -> Governance.reidRiskSql(),
-    "eval_pr_threshold_sweep" -> Evaluation.prThresholdSweepSql,
-    "ts_seasonal_strength" -> TimeSeries.seasonalStrengthSql,
-    "stats_power_law_alpha" -> EventQueries.powerLawAlphaSql,
-    "ts_theil_sen" -> TimeSeries.theilSenSql,
-    "survival_km" -> Survival.kaplanMeierSql,
-    "survival_nelson_aalen" -> Survival.nelsonAalenSql,
-    "survival_aalen_johansen" -> Survival.aalenJohansenSql(),
-    "survival_logrank" -> Survival.logRankSql,
-    "survival_rmst" -> Survival.rmstSql(),
-    "survival_life_table" -> Survival.lifeTableSql(),
-    "survival_hazard_ratio" -> Survival.hazardRatioSql,
-    "stats_ks_uniform_weekday" -> Relational.ksUniformWeekdaySql,
-    "stats_decile_lift" -> Relational.decileLiftSql,
-    "events_max_concurrency" -> EventQueries.maxConcurrencySql,
-    "cohort_ltv" -> Relational.cohortLtvSql,
-    "basket_rules" -> GraphQueries.basketRulesSql,
-    "events_session_paths" -> EventQueries.sessionPathsSql,
-    "drift_welch_ttest" -> Drift.welchTTestSql,
-    "events_reach_curve" -> EventQueries.reachCurveSql,
-    "stats_histogram_eqdepth" -> Relational.statsHistogramEqdepthSql,
-    "embed_outliers" -> EmbeddingQueries.outliersByLabelSql,
-    "stats_anova_priority" -> Relational.anovaPrioritySql,
-    "stats_levene" -> Relational.levenePrioritySql,
-    "stats_mcnemar" -> Relational.mcnemarYearsSql,
-    "stats_wilcoxon_signed" -> Drift.wilcoxonSignedRankSql,
-    "stats_friedman" -> Drift.friedmanSql,
-    "stats_cochran_armitage" -> Relational.cochranArmitageSql,
-    "stats_kruskal_wallis" -> Relational.kruskalWallisSql,
-    "stats_dunn_pairs" -> Relational.dunnPairsSql,
-    "stats_tukey_hsd" -> Relational.tukeyHsdSql,
-    "stats_bartlett" -> Relational.bartlettSql,
-    "stats_mood_median" -> Relational.moodMedianSql,
-    "eval_roc_auc" -> Evaluation.rocAucSql,
-    "eval_average_precision" -> Evaluation.averagePrecisionSql,
-    "eval_calibration" -> Evaluation.calibrationSql,
-    "eval_self_retrieval_mrr" -> Evaluation.selfRetrievalMrrSql(),
-    "eval_ndcg" -> Evaluation.ndcgSql(),
-    "text_jsd_langs" -> TextQueries.jsdLangsSql,
-    "docs_simpson_diversity" -> TextQueries.simpsonDiversitySql,
-    "docs_hapax_share" -> TextQueries.hapaxShareSql,
-    "docs_yule_k" -> TextQueries.yuleKSql,
-    "docs_mattr" -> TextQueries.mattrSql(),
-    "text_gopher_repetition" -> TextQueries.gopherRepetitionSql,
-    "text_good_turing" -> TextQueries.goodTuringSql(),
-    "text_word_burstiness" -> TextQueries.wordBurstinessSql(),
-    "text_langid_prf" -> TextQueries.langIdPrfSql,
-    "stats_cohens_kappa" -> TextQueries.cohensKappaSql,
-    "docs_heaps_law" -> TextQueries.heapsLawSql(),
-    "events_burstiness" -> EventQueries.burstinessSql,
-    "ts_mann_kendall" -> TimeSeries.mannKendallSql,
-    "ts_seasonal_mann_kendall" -> TimeSeries.seasonalMannKendallSql,
-    "events_unattributed" -> EventQueries.unattributedPurchasesSql,
-    "graph_kcore" -> GraphQueries.kcorePeelSql,
-    "stats_hhi_nation" -> Relational.hhiNationSql,
-    "events_user_entropy" -> EventQueries.userEntropySql,
-    "stats_mutual_info" -> EventQueries.mutualInfoSql,
-    "sample_poisson_bootstrap" -> Sampling.poissonBootstrapSql,
-    "text_doc_keywords" -> TextQueries.docKeywordsSql,
-    "ts_runs_test" -> TimeSeries.runsTestSql,
-    "ts_spearman" -> TimeSeries.spearmanDailySql,
-    "ts_kendall_tau" -> TimeSeries.kendallTauSql,
-    "ts_turning_points" -> TimeSeries.turningPointsSql,
-    "ts_variance_ratio" -> TimeSeries.varianceRatioSql(),
-    "graph_clustering_coeff" -> GraphQueries.clusteringCoeffSql,
-    "graph_link_jaccard" -> GraphQueries.linkJaccardSql,
-    "graph_link_jaccard_partitioned" -> GraphQueries.linkJaccardSql,
-    "graph_resource_alloc" -> GraphQueries.resourceAllocSql,
-    "graph_resource_alloc_partitioned" -> GraphQueries.resourceAllocSql,
-    "graph_adamic_adar" -> GraphQueries.adamicAdarSql,
-    "graph_adamic_adar_partitioned" -> GraphQueries.adamicAdarSql,
-    "graph_common_neighbors" -> GraphQueries.commonNeighborsSql,
-    "graph_pref_attachment" -> GraphQueries.prefAttachmentSql,
-    "graph_katz_walks" -> GraphQueries.katzWalksSql,
-    "graph_degree_histogram" -> GraphQueries.degreeHistogramSql,
-    "graph_rich_club" -> GraphQueries.richClubSql,
-    "graph_local_bridges" -> GraphQueries.localBridgesSql,
-    "graph_hits_walks" -> GraphQueries.hitsWalksSql,
-    "dedup_containment" -> TextQueries.dedupContainmentSql,
-    "drift_mann_whitney" -> Drift.mannWhitneySql,
-    "events_funnel_within" -> EventQueries.funnelWithinSql,
-    "unpivot_metrics" -> Relational.unpivotMetricsSql,
-    "stats_weighted_median" -> Relational.weightedMedianSql,
-    "governance_delete_impact" -> Governance.deleteImpactSql,
-    "text_vocab_coverage" -> TextQueries.vocabCoverageSql,
-    "embed_knn_graph" -> EmbeddingQueries.knnGraphSql,
-    "dq_expectations" -> Governance.dqExpectationsSql,
-    "pii_k_anonymity" -> Governance.kAnonymitySql,
-    "pii_l_diversity" -> Governance.lDiversitySql(),
-    "pii_t_closeness" -> Governance.tClosenessSql(),
-    "split_leakage_audit" -> Governance.splitLeakageAuditSql,
-    "pareto_frontier" -> Governance.paretoFrontierSql,
-    "winsorize_stats" -> Governance.winsorizeStatsSql,
-    "split_balance_chisq" -> Governance.splitBalanceChisqSql,
-    "embed_hard_negatives" -> EmbeddingQueries.hardNegativesSql,
-    "drift_psi" -> Drift.psiSql,
-    "drift_ks" -> Drift.ksSql,
-    "graph_modularity" -> GraphQueries.modularitySql,
-    "attribution_time_decay" -> EventQueries.attributionTimeDecaySql,
-    "dq_functional_deps" -> Governance.functionalDepsSql,
-    "pii_dp_release" -> Governance.dpReleaseSql,
-    "corpus_datacard" -> Governance.datacardSql,
-    "merge_upsert" -> EventQueries.mergeUpsertSql,
-    "text_bpe_merge" -> TextQueries.bpeMergeStepSql,
-    "text_perplexity" -> TextQueries.perplexitySql,
-    "text_ccnet_buckets" -> TextQueries.ccnetBucketsSql,
-    "text_tfidf_terms" -> TextQueries.tfidfTermsSql,
-    "events_value_mad" -> EventQueries.valueMadSql,
-    "embed_threshold_sweep" -> EmbeddingQueries.thresholdSweepSql,
-    "text_normalize" -> TextQueries.normalizeTextSql,
-    "docs_chunk_sliding" -> TextQueries.chunkSlidingSql,
-    "decontaminate_ngram" -> Sampling.decontaminateSql,
-    "decontaminate_bloom" -> Sampling.decontaminateBloomAuditSql,
-    "pack_chunks" -> Sampling.packChunksSql,
-    "mixture_downsample" -> Sampling.mixtureDownsampleSql,
-    "dedup_exact" -> TextQueries.dedupExactSql,
-    "dedup_exact_paragraph" -> TextQueries.dedupExactParagraphSql(),
-    "dedup_paragraph_top" -> TextQueries.dedupParagraphTopSql(),
-    "dedup_paragraph_savings" -> TextQueries.dedupParagraphSavingsSql(),
-    "dedup_exact_substring" -> TextQueries.exactSubstringDedupSql,
-    "dedup_cluster_sizes" -> TextQueries.dedupClusterSizesSql,
-    "dedup_ngram_jaccard" -> TextQueries.dedupNgramJaccardSql,
-    "text_bpe_encode" -> TextQueries.bpeEncodeAuditSql,
-    "dedup_prefix_jaccard" -> TextQueries.dedupPrefixJaccardSql,
-    "dedup_components" -> graft.llm.DedupClusters.dedupComponentsSql,
-    "dedup_keep_best" -> graft.llm.DedupClusters.dedupKeepBestSql,
-    "ann_topk_cosine" -> EmbeddingQueries.annTopKSql,
-    "embed_intrinsic_dim" -> EmbeddingQueries.intrinsicDimSql(),
-    "ann_topk_cosine_i8" -> EmbeddingQueries.annTopKI8Sql,
-    "ann_ivf_topk" -> EmbeddingQueries.annAuditSql,
-    "dedup_minhash_lsh" -> graft.llm.MinHashDedup.nearDupPairsAuditSql,
-    "dedup_simhash" -> graft.llm.SimHashDedup.nearDupPairsAuditSql,
-    "embed_neardup_lsh" -> EmbeddingQueries.nearDupLshAuditSql,
-    "embed_semdedup" -> EmbeddingQueries.semDedupAuditSql,
-    "ann_pq_topk" -> EmbeddingQueries.annAuditSql,
-    "ann_ivfpq_topk" -> EmbeddingQueries.annAuditSql,
-    "embed_mmr_topk" -> EmbeddingQueries.mmrTopKSql,
-    "embed_pca_project" -> EmbeddingQueries.pcaProjectAuditSql,
-    "embed_pca_explained" -> EmbeddingQueries.pcaExplainedAuditSql(),
-    "embed_centroid_by_label" -> EmbeddingQueries.centroidByLabelSql,
-    "embed_silhouette" -> EmbeddingQueries.silhouetteSql,
-    "embed_norm_quantiles" -> EmbeddingQueries.normQuantilesByLabelSql,
-    "embed_dim_ablation" -> EmbeddingQueries.dimAblationSql,
-    "multimodal_meta" -> Multimodal.mediaMetaSql,
-    "multimodal_dedup" -> Multimodal.mediaDedupSql,
-    "multimodal_cdc_chunks" -> Multimodal.cdcChunkAuditSql,
-    "dedup_minhash_signatures" -> MinHashDedup.signatureAuditSql,
-    "dedup_lsh_bucket_audit" -> MinHashDedup.bucketConservationAuditSql,
-    "events_value_quantiles_approx" -> EventQueries.valueQuantilesApproxAuditSql,
-    "events_value_mad_approx" -> EventQueries.valueMadApproxAuditSql,
-    "text_compression_ratio" -> TextQueries.compressionAuditSql,
-    "multimodal_cdc_pairs" -> Multimodal.cdcPairsAuditSql(),
+  final case class Query(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracle: Option[String],
+    warm: Warm = Warm.Cold)
+
+  /** How `Bench` warms a query's generated code before its timed run.
+    * Warm-up results are discarded; only compiled classes survive.
+    */
+  sealed trait Warm
+  object Warm {
+    /** No own warm-up: the generic scan+agg+sort warm-up is enough. */
+    case object Cold extends Warm
+    /** Run once at sf0.001. These rows' generated code is
+      * data-independent (HLL, codebook-literal and regex codegen), so
+      * the tiny run compiles and JIT-warms the classes the timed run
+      * uses; cold, each paid 2.6-6.3 s of in-window JIT (r12).
+      */
+    case object SmallSf extends Warm
+    /** Run once at the timed SF. The graph Pregel family's generated
+      * code depends on AQE's join choices, which differ across SFs, so
+      * sf0.001 classes never transfer (r17 A/B); one same-SF run leaves
+      * the timed run compiling zero new classes, walls down 30-45 %
+      * (r18 JitProbe: pagerank 4.1 -> 1.7 s).
+      */
+    case object TimedSf extends Warm
+  }
+
+  /** One record per implemented operator from SURVEY.md §2. */
+  lazy val registry: Seq[Query] = Seq(
+    // reference parity
+    Query("dolar_e2e_interval", dolarE2e, Some(dolarE2eSql)),
+    Query("dolar_e2e_stream", dolarE2eStream, Some(dolarE2eSql)),
+    Query("dolar_e2e_stream_pt", dolarE2eStreamPt, None),
+    Query("dolar_parity", dolarParity, Some(dolarParitySql)),
+    Query("interval_events", EventQueries.intervalEvents,
+      Some(EventQueries.intervalEventsSql)),
+    // relational: aggregation
+    Query("q1_pricing_summary", Relational.q1PricingSummary,
+      Some(Relational.q1PricingSummarySql)),
+    Query("agg_orders_by_priority", Relational.aggOrdersByPriority,
+      Some(Relational.aggOrdersByPrioritySql)),
+    Query("agg_cube", Relational.aggCube, Some(Relational.aggCubeSql)),
+    Query("agg_rollup", Relational.aggRollup, Some(Relational.aggRollupSql)),
+    Query("agg_count_distinct", Relational.aggCountDistinct,
+      Some(Relational.aggCountDistinctSql)),
+    Query("agg_approx_distinct", Relational.aggApproxDistinctAudit,
+      Some(Relational.aggApproxDistinctAuditSql), Warm.SmallSf),
+    Query("agg_minmax_by_brand", Relational.aggMinMaxByBrand,
+      Some(Relational.aggMinMaxByBrandSql)),
+    Query("agg_mode_by_brand", Relational.modeByBrand, Some(Relational.modeByBrandSql)),
+    Query("agg_geomean_by_brand", Relational.geomeanByBrand,
+      Some(Relational.geomeanByBrandSql)),
+    Query("agg_skew_kurtosis", Relational.skewKurtosisByBrand,
+      Some(Relational.skewKurtosisByBrandSql)),
+    Query("stats_quantiles_exact", Relational.quantilesExact,
+      Some(Relational.quantilesExactSql)),
+    Query("seq_gap_islands", (s, d) => Relational.eventIdIslands(s, d),
+      Some(Relational.eventIdIslandsSql)),
+    Query("agg_grouping_sets", Relational.aggGroupingSets,
+      Some(Relational.aggGroupingSetsSql)),
+    Query("agg_median_price", Relational.aggMedianPrice,
+      Some(Relational.aggMedianPriceSql)),
+    Query("agg_nations_by_region", Relational.aggNationsByRegion,
+      Some(Relational.aggNationsByRegionSql)),
+    Query("pivot_status_counts", Relational.pivotStatusCounts,
+      Some(Relational.pivotStatusCountsSql)),
+    // relational: joins
+    Query("q3_top_revenue", Relational.q3TopRevenue, Some(Relational.q3TopRevenueSql)),
+    Query("q5_local_supplier", Relational.q5LocalSupplier,
+      Some(Relational.q5LocalSupplierSql)),
+    Query("q7_volume_shipping", Relational.q7VolumeShipping,
+      Some(Relational.q7VolumeShippingSql)),
+    Query("q8_market_share", Relational.q8MarketShare, Some(Relational.q8MarketShareSql)),
+    Query("q10_returned_items", Relational.q10ReturnedItems,
+      Some(Relational.q10ReturnedItemsSql)),
+    Query("q14_promo_revenue", Relational.q14PromoRevenue,
+      Some(Relational.q14PromoRevenueSql)),
+    Query("q18_large_orders", Relational.q18LargeOrders,
+      Some(Relational.q18LargeOrdersSql)),
+    // TPC-H completion: the other 14 classic shapes (TpchShapes)
+    Query("q2_min_cost_supplier", TpchShapes.q2MinCostSupplier,
+      Some(TpchShapes.q2MinCostSupplierSql)),
+    Query("q4_order_priority", TpchShapes.q4OrderPriority,
+      Some(TpchShapes.q4OrderPrioritySql)),
+    Query("q6_forecast_revenue", TpchShapes.q6ForecastRevenue,
+      Some(TpchShapes.q6ForecastRevenueSql)),
+    Query("q9_product_profit", TpchShapes.q9ProductProfit,
+      Some(TpchShapes.q9ProductProfitSql)),
+    Query("q11_important_stock", TpchShapes.q11ImportantStock,
+      Some(TpchShapes.q11ImportantStockSql)),
+    Query("q12_ship_priority", TpchShapes.q12ShipPriority,
+      Some(TpchShapes.q12ShipPrioritySql)),
+    Query("q13_cust_order_dist", TpchShapes.q13CustOrderDist,
+      Some(TpchShapes.q13CustOrderDistSql)),
+    Query("q15_top_supplier", TpchShapes.q15TopSupplier,
+      Some(TpchShapes.q15TopSupplierSql)),
+    Query("q16_part_supplier_cnt", TpchShapes.q16PartSupplierCnt,
+      Some(TpchShapes.q16PartSupplierCntSql)),
+    Query("q17_small_qty_revenue", TpchShapes.q17SmallQtyRevenue,
+      Some(TpchShapes.q17SmallQtyRevenueSql)),
+    Query("q19_disjunctive_revenue", TpchShapes.q19DisjunctiveRevenue,
+      Some(TpchShapes.q19DisjunctiveRevenueSql)),
+    Query("q20_excess_suppliers", TpchShapes.q20ExcessSuppliers,
+      Some(TpchShapes.q20ExcessSuppliersSql)),
+    Query("q21_waiting_supplier", TpchShapes.q21WaitingSupplier,
+      Some(TpchShapes.q21WaitingSupplierSql)),
+    Query("q22_sales_opportunity", TpchShapes.q22SalesOpportunity,
+      Some(TpchShapes.q22SalesOpportunitySql)),
+    Query("join_broadcast_dim", Relational.joinBroadcastDim,
+      Some(Relational.joinBroadcastDimSql)),
+    Query("join_left_outer", Relational.joinLeftOuter, Some(Relational.joinLeftOuterSql)),
+    Query("join_semi", Relational.joinSemi, Some(Relational.joinSemiSql)),
+    Query("join_anti", Relational.joinAnti, Some(Relational.joinAntiSql)),
+    Query("bucketed_join", graft.plans.Bucketing.bucketedJoinDemo,
+      Some(graft.plans.Bucketing.bucketedJoinDemoSql)),
+    Query("join_skew_salted", graft.plans.SkewJoin.skewJoinDemo,
+      Some(graft.plans.SkewJoin.skewJoinDemoSql)),
+    Query("zorder_layout", graft.plans.ZOrder.zorderLayout,
+      Some(graft.plans.ZOrder.zorderLayoutSql)),
+    // relational: windows / set ops / sort-limit / scan
+    Query("window_rank_orders", Relational.windowRankOrders,
+      Some(Relational.windowRankOrdersSql)),
+    Query("setop_union", Relational.setopUnion, Some(Relational.setopUnionSql)),
+    Query("setop_intersect", Relational.setopIntersect,
+      Some(Relational.setopIntersectSql)),
+    Query("setop_except", Relational.setopExcept, Some(Relational.setopExceptSql)),
+    Query("topk_orders", Relational.topkOrders, Some(Relational.topkOrdersSql)),
+    Query("scan_filter_project", Relational.scanFilterProject,
+      Some(Relational.scanFilterProjectSql)),
+    Query("subquery_exists", Relational.subqueryExists,
+      Some(Relational.subqueryExistsSql)),
+    Query("subquery_not_exists", Relational.subqueryNotExists,
+      Some(Relational.subqueryNotExistsSql)),
+    Query("subquery_scalar_avg", Relational.subqueryScalarAvg,
+      Some(Relational.subqueryScalarAvgSql)),
+    Query("subquery_in", Relational.subqueryIn, Some(Relational.subqueryInSql)),
+    Query("subquery_not_in", Relational.subqueryNotIn, Some(Relational.subqueryNotInSql)),
+    Query("join_full_outer", Relational.joinFullOuter, Some(Relational.joinFullOuterSql)),
+    Query("join_fuzzy_name", Relational.joinFuzzyName, Some(Relational.joinFuzzyNameSql)),
+    Query("dedup_typo_pairs", Relational.typoPairs, Some(Relational.typoPairsSql)),
+    Query("window_distribution", Relational.windowDistribution,
+      Some(Relational.windowDistributionSql)),
+    Query("agg_monthly_revenue", Relational.aggMonthlyRevenue,
+      Some(Relational.aggMonthlyRevenueSql)),
+    Query("profile_columns", Relational.profileColumns,
+      Some(Relational.profileColumnsSql)),
+    Query("integrity_checksum", Relational.integrityChecksum,
+      Some(Relational.integrityChecksumSql)),
+    Query("order_cycle_time", Relational.orderCycleTime,
+      Some(Relational.orderCycleTimeSql)),
+    Query("ivm_refresh", Relational.ivmRefresh, Some(Relational.ivmRefreshSql)),
+    Query("stats_histogram", Relational.statsHistogram,
+      Some(Relational.statsHistogramSql)),
+    Query("attribution_last_touch", EventQueries.attributionLastTouch,
+      Some(EventQueries.attributionLastTouchSql)),
+    Query("sketch_quantile_rollup", EventQueries.quantileRollup,
+      Some(EventQueries.quantileRollupSql)),
+    Query("funnel_stages", EventQueries.funnelStages, Some(EventQueries.funnelStagesSql)),
+    Query("snapshot_diff", Relational.snapshotDiff, Some(Relational.snapshotDiffSql)),
+    Query("join_explosion_check", EventQueries.joinExplosionCheck,
+      Some(EventQueries.joinExplosionCheckSql)),
+    Query("stats_correlation", Relational.statsCorrelation,
+      Some(Relational.statsCorrelationSql)),
+    Query("embed_quant_error", EmbeddingQueries.quantErrorReport,
+      Some(EmbeddingQueries.quantErrorReportSql)),
+    Query("mixture_temperature_alloc", Sampling.mixtureTemperatureAlloc,
+      Some(Sampling.mixtureTemperatureAllocSql)),
+    Query("sample_reservoir_per_key", (s, d) => Sampling.reservoirPerKey(s, d),
+      Some(Sampling.reservoirPerKeySql)),
+    Query("compaction_plan", (s, d) => graft.plans.Compaction.compactionPlan(s, d), None),
+    Query("agg_string_concat", Relational.aggStringConcat,
+      Some(Relational.aggStringConcatSql)),
+    Query("string_funcs", Relational.stringFuncs,
+      Some(Relational.stringFuncsSql), Warm.SmallSf),
+    // time series / streaming duals
+    Query("window_tumbling_hourly", EventQueries.tumblingHourly,
+      Some(EventQueries.tumblingHourlySql)),
+    Query("window_moving_avg", EventQueries.movingAvg, Some(EventQueries.movingAvgSql)),
+    Query("window_range_hour", EventQueries.rangeLastHour,
+      Some(EventQueries.rangeLastHourSql)),
+    Query("window_lag_delta", EventQueries.lagDelta, Some(EventQueries.lagDeltaSql)),
+    Query("sessionize_events", EventQueries.sessionize, Some(EventQueries.sessionizeSql)),
+    Query("asof_purchase", EventQueries.asofPurchase, Some(EventQueries.asofPurchaseSql)),
+    Query("asof_next_purchase", EventQueries.asofNextPurchase,
+      Some(EventQueries.asofNextPurchaseSql)),
+    Query("asof_nearest", EventQueries.asofNearest, Some(EventQueries.asofNearestSql)),
+    Query("range_join_nearby", (s, d) => EventQueries.rangeJoinNearby(s, d),
+      Some(EventQueries.rangeJoinNearbySql)),
+    Query("range_join_overlap", EventQueries.rangeJoinOverlap,
+      Some(EventQueries.rangeJoinOverlapSql)),
+    Query("events_gapfill_daily", EventQueries.gapfillDaily,
+      Some(EventQueries.gapfillDailySql)),
+    Query("events_funnel", EventQueries.funnel, Some(EventQueries.funnelSql)),
+    Query("events_dau_wau", EventQueries.dauWau, Some(EventQueries.dauWauSql)),
+    Query("events_value_quantiles", EventQueries.valueQuantiles,
+      Some(EventQueries.valueQuantilesSql)),
+    Query("events_json_props", EventQueries.jsonProps, Some(EventQueries.jsonPropsSql)),
+    Query("scd2_history", EventQueries.scd2History, Some(EventQueries.scd2HistorySql)),
+    Query("events_retention_cohorts", EventQueries.retentionCohorts,
+      Some(EventQueries.retentionCohortsSql)),
+    Query("events_anomaly_zscore", EventQueries.anomalyZscore,
+      Some(EventQueries.anomalyZscoreSql)),
+    Query("cdc_latest_state", EventQueries.cdcLatestState,
+      Some(EventQueries.cdcLatestStateSql)),
+    Query("window_session_native", EventQueries.sessionWindowNative,
+      Some(EventQueries.sessionWindowNativeSql)),
+    Query("events_value_quantiles_approx",
+      (s, d) => EventQueries.valueQuantilesApproxAudit(s, d),
+      Some(EventQueries.valueQuantilesApproxAuditSql)),
+    Query("events_quantile_rank_audit", EventQueries.quantileRankAudit,
+      Some(EventQueries.quantileRankAuditSql)),
+    Query("events_markov_stationary", (s, d) => EventQueries.markovStationary(s, d),
+      Some(EventQueries.markovStationarySql())),
+    Query("events_markov_attribution", (s, d) => EventQueries.markovAttribution(s, d),
+      Some(EventQueries.markovAttributionSql())),
+    Query("attribution_position", (s, d) => EventQueries.attributionPosition(s, d),
+      Some(EventQueries.attributionPositionSql())),
+    Query("events_growth_accounting", EventQueries.growthAccounting,
+      Some(EventQueries.growthAccountingSql)),
+    Query("events_markov_transitions", EventQueries.markovTransitions,
+      Some(EventQueries.markovTransitionsSql)),
+    Query("events_markov_entropy", EventQueries.markovEntropyRate,
+      Some(EventQueries.markovEntropyRateSql)),
+    Query("events_time_weighted_avg", EventQueries.timeWeightedAvg,
+      Some(EventQueries.timeWeightedAvgSql)),
+    Query("events_activity_streaks", EventQueries.activityStreaks,
+      Some(EventQueries.activityStreaksSql)),
+    Query("typed_group_stats", EventQueries.typedGroupStats,
+      Some(EventQueries.typedGroupStatsSql)),
+    Query("text_hash_features", TextQueries.hashFeatures,
+      Some(TextQueries.hashFeaturesSql)),
+    Query("text_importance_dsir", (s, d) => TextQueries.importanceDsir(s, d),
+      Some(TextQueries.importanceDsirSql)),
+    Query("text_compression_ratio", TextQueries.compressionAudit,
+      Some(TextQueries.compressionAuditSql)),
+    Query("text_repeated_passages", TextQueries.repeatedPassages,
+      Some(TextQueries.repeatedPassagesSql)),
+    Query("agg_regr_slope", Relational.aggRegrSlope, Some(Relational.aggRegrSlopeSql)),
+    Query("agg_yoy_growth", Relational.aggYoyGrowth, Some(Relational.aggYoyGrowthSql)),
+    Query("customer_rfm", Relational.customerRfm, Some(Relational.customerRfmSql)),
+    Query("customer_rfm_approx", Relational.customerRfmApproxAudit,
+      Some(Relational.customerRfmApproxAuditSql)),
+    Query("merge_upsert", EventQueries.mergeUpsert, Some(EventQueries.mergeUpsertSql)),
+    // graph analytics
+    Query("graph_pagerank", GraphQueries.pagerank,
+      Some(GraphQueries.pagerankSql), Warm.TimedSf),
+    Query("graph_ppr_walks", (s, d) => GraphQueries.pprWalks(s, d),
+      Some(GraphQueries.pprWalksSql), Warm.TimedSf),
+    Query("graph_copurchase", GraphQueries.copurchasePairs,
+      Some(GraphQueries.copurchasePairsSql)),
+    Query("graph_triangles", (s, d) => GraphQueries.triangleCount(s, d),
+      Some(GraphQueries.triangleCountSql)),
+    // the beyond-broadcast spelling: same joins, hash-partitioned —
+    // same oracle, so the driver proves count equality between modes
+    Query("graph_triangles_partitioned",
+      (s, d) => GraphQueries.triangleCount(s, d, broadcastAdj = false),
+      Some(GraphQueries.triangleCountSql)),
+    Query("graph_khop_reach", (s, d) => GraphQueries.khopReach(s, d),
+      Some(GraphQueries.khopReachSql), Warm.TimedSf),
+    Query("graph_closeness_sampled", (s, d) => GraphQueries.closenessSampled(s, d),
+      Some(GraphQueries.closenessSampledSql), Warm.TimedSf),
+    Query("graph_sssp", (s, d) => GraphQueries.ssspBounded(s, d),
+      Some(GraphQueries.ssspBoundedSql), Warm.TimedSf),
+    Query("graph_assortativity", GraphQueries.assortativity,
+      Some(GraphQueries.assortativitySql)),
+    Query("graph_avg_neighbor_degree", GraphQueries.avgNeighborDegree,
+      Some(GraphQueries.avgNeighborDegreeSql)),
+    Query("ts_hurst_rs", TimeSeries.hurstRs, Some(TimeSeries.hurstRsSql)),
+    Query("graph_label_propagation", (s, d) => GraphQueries.labelPropagation(s, d),
+      Some(GraphQueries.labelPropagationSql), Warm.TimedSf),
+    Query("stats_gini_spend", Relational.giniSpend, Some(Relational.giniSpendSql)),
+    Query("stats_theil_nation", Relational.theilNation, Some(Relational.theilNationSql)),
+    Query("stats_atkinson_mld", Relational.atkinsonMld, Some(Relational.atkinsonMldSql)),
+    Query("docs_pielou_evenness", TextQueries.pielouEvenness,
+      Some(TextQueries.pielouEvennessSql)),
+    Query("docs_readability", TextQueries.readability, Some(TextQueries.readabilitySql)),
+    Query("docs_source_jsd", (s, d) => TextQueries.sourceJsd(s, d),
+      Some(TextQueries.sourceJsdSql())),
+    Query("docs_length_histogram", TextQueries.lengthHistogram,
+      Some(TextQueries.lengthHistogramSql)),
+    Query("events_hill_tail_index", (s, d) => EventQueries.hillTailIndex(s, d),
+      Some(EventQueries.hillTailIndexSql())),
+    Query("events_interarrival", EventQueries.interArrival,
+      Some(EventQueries.interArrivalSql)),
+    Query("events_hourly_profile", EventQueries.hourlyProfile,
+      Some(EventQueries.hourlyProfileSql)),
+    Query("events_poisson_rate", EventQueries.poissonRateTest,
+      Some(EventQueries.poissonRateTestSql)),
+    Query("stats_benford", Governance.benford, Some(Governance.benfordSql)),
+    Query("stats_jarque_bera", Relational.jarqueBera, Some(Relational.jarqueBeraSql)),
+    Query("stats_chi2_independence", Relational.chi2Cells, Some(Relational.chi2CellsSql)),
+    Query("stats_cramers_v", Relational.cramersV, Some(Relational.cramersVSql)),
+    Query("stats_g_test", Relational.gTest, Some(Relational.gTestSql)),
+    Query("stats_trimmed_mean", (s, d) => Relational.trimmedMean(s, d),
+      Some(Relational.trimmedMeanSql())),
+    Query("stats_sign_test", Relational.signTest, Some(Relational.signTestSql)),
+    Query("stats_bowker_symmetry", Relational.bowkerSymmetry,
+      Some(Relational.bowkerSymmetrySql)),
+    Query("stats_bh_adjust", MultipleTesting.bhAdjust, Some(MultipleTesting.bhAdjustSql)),
+    Query("graph_reciprocity", Relational.reciprocity, Some(Relational.reciprocitySql)),
+    Query("text_ngram_novelty", TextQueries.ngramNovelty,
+      Some(TextQueries.ngramNoveltySql)),
+    Query("text_zipf_slope", (s, d) => TextQueries.zipfSlope(s, d),
+      Some(TextQueries.zipfSlopeSql)),
+    // time series
+    Query("ts_seasonal_decompose", TimeSeries.seasonalDecompose,
+      Some(TimeSeries.seasonalDecomposeSql)),
+    Query("ts_changepoint_cusum", TimeSeries.cusumChangepoint,
+      Some(TimeSeries.cusumChangepointSql)),
+    Query("ts_peaks", (s, d) => TimeSeries.peaks(s, d), Some(TimeSeries.peaksSql)),
+    Query("ts_autocorrelation", TimeSeries.autocorrelation,
+      Some(TimeSeries.autocorrelationSql)),
+    Query("ts_ljung_box", (s, d) => TimeSeries.ljungBox(s, d),
+      Some(TimeSeries.ljungBoxSql)),
+    Query("ts_pacf", TimeSeries.pacf, Some(TimeSeries.pacfSql)),
+    Query("ts_cross_correlation", TimeSeries.crossCorrelation,
+      Some(TimeSeries.crossCorrelationSql)),
+    Query("ts_granger_lag1", TimeSeries.grangerLag1, Some(TimeSeries.grangerLag1Sql)),
+    Query("ts_permutation_entropy", TimeSeries.permutationEntropy,
+      Some(TimeSeries.permutationEntropySql)),
+    Query("ts_sample_entropy", TimeSeries.sampleEntropy,
+      Some(TimeSeries.sampleEntropySql)),
+    Query("ts_dickey_fuller", TimeSeries.dickeyFuller, Some(TimeSeries.dickeyFullerSql)),
+    Query("ts_pettitt", TimeSeries.pettitt, Some(TimeSeries.pettittSql)),
+    Query("ts_ewma", (s, d) => TimeSeries.ewma(s, d), Some(TimeSeries.ewmaSql())),
+    Query("ts_holt_linear", (s, d) => TimeSeries.holtLinear(s, d),
+      Some(TimeSeries.holtLinearSql())),
+    Query("ts_rolling_median", TimeSeries.rollingMedian,
+      Some(TimeSeries.rollingMedianSql)),
+    Query("ts_forecast_backtest", (s, d) => TimeSeries.forecastBacktest(s, d),
+      Some(TimeSeries.forecastBacktestSql())),
+    Query("ts_stl_anomaly", (s, d) => TimeSeries.stlAnomaly(s, d),
+      Some(TimeSeries.stlAnomalySql())),
+    Query("stats_dispersion_index", TimeSeries.dispersionIndex,
+      Some(TimeSeries.dispersionIndexSql)),
+    Query("drift_qq_deciles", Drift.qqDeciles, Some(Drift.qqDecilesSql)),
+    Query("ab_conversion_ztest", (s, d) => Drift.abConversion(s, d),
+      Some(Drift.abConversionSql())),
+    Query("ab_cuped_revenue", Drift.abCuped, Some(Drift.abCupedSql)),
+    Query("ab_permutation_test", (s, d) => Drift.abPermutationTest(s, d),
+      Some(Drift.abPermutationTestSql())),
+    Query("ab_power_mde", (s, d) => Drift.abPowerMde(s, d), Some(Drift.abPowerMdeSql())),
+    Query("ab_srm_check", Drift.abSrmCheck, Some(Drift.abSrmCheckSql)),
+    Query("ab_delta_ratio_ci", Drift.abDeltaRatio, Some(Drift.abDeltaRatioSql)),
+    Query("eval_brier_score", Evaluation.brierScore, Some(Evaluation.brierScoreSql)),
+    Query("eval_score_agreement", Evaluation.scoreAgreement,
+      Some(Evaluation.scoreAgreementSql)),
+    Query("stats_hodges_lehmann", TimeSeries.hodgesLehmann,
+      Some(TimeSeries.hodgesLehmannSql)),
+    Query("stats_page_trend", Drift.pageTrend, Some(Drift.pageTrendSql)),
+    Query("events_wilson_ci", EventQueries.wilsonCi, Some(EventQueries.wilsonCiSql)),
+    Query("drift_cvm", Drift.cvm, Some(Drift.cvmSql)),
+    Query("stats_ansari_bradley", Drift.ansariBradley, Some(Drift.ansariBradleySql)),
+    Query("ts_holt_winters", (s, d) => TimeSeries.holtWinters(s, d),
+      Some(TimeSeries.holtWintersSql())),
+    Query("events_rfm_migration", EventQueries.rfmMigration,
+      Some(EventQueries.rfmMigrationSql)),
+    Query("drift_effect_size", Drift.effectSize, Some(Drift.effectSizeSql)),
+    Query("pii_reid_risk", (s, d) => Governance.reidRisk(s, d),
+      Some(Governance.reidRiskSql())),
+    Query("eval_pr_threshold_sweep", Evaluation.prThresholdSweep,
+      Some(Evaluation.prThresholdSweepSql)),
+    Query("ts_seasonal_strength", TimeSeries.seasonalStrength,
+      Some(TimeSeries.seasonalStrengthSql)),
+    Query("stats_power_law_alpha", EventQueries.powerLawAlpha,
+      Some(EventQueries.powerLawAlphaSql)),
+    Query("ts_theil_sen", TimeSeries.theilSen, Some(TimeSeries.theilSenSql)),
+    Query("survival_km", Survival.kaplanMeier, Some(Survival.kaplanMeierSql)),
+    Query("survival_nelson_aalen", Survival.nelsonAalen, Some(Survival.nelsonAalenSql)),
+    Query("survival_aalen_johansen", (s, d) => Survival.aalenJohansen(s, d),
+      Some(Survival.aalenJohansenSql())),
+    Query("survival_logrank", Survival.logRank, Some(Survival.logRankSql)),
+    Query("survival_rmst", (s, d) => Survival.rmst(s, d), Some(Survival.rmstSql())),
+    Query("survival_life_table", (s, d) => Survival.lifeTable(s, d),
+      Some(Survival.lifeTableSql())),
+    Query("survival_hazard_ratio", Survival.hazardRatio, Some(Survival.hazardRatioSql)),
+    Query("stats_ks_uniform_weekday", Relational.ksUniformWeekday,
+      Some(Relational.ksUniformWeekdaySql)),
+    Query("stats_decile_lift", Relational.decileLift, Some(Relational.decileLiftSql)),
+    Query("events_max_concurrency", EventQueries.maxConcurrency,
+      Some(EventQueries.maxConcurrencySql)),
+    Query("cohort_ltv", Relational.cohortLtv, Some(Relational.cohortLtvSql)),
+    Query("basket_rules", (s, d) => GraphQueries.basketRules(s, d),
+      Some(GraphQueries.basketRulesSql)),
+    Query("events_session_paths", EventQueries.sessionPaths,
+      Some(EventQueries.sessionPathsSql)),
+    Query("drift_welch_ttest", Drift.welchTTest, Some(Drift.welchTTestSql)),
+    Query("events_reach_curve", EventQueries.reachCurve,
+      Some(EventQueries.reachCurveSql)),
+    Query("stats_histogram_eqdepth", Relational.statsHistogramEqdepth,
+      Some(Relational.statsHistogramEqdepthSql)),
+    Query("embed_outliers", (s, d) => EmbeddingQueries.outliersByLabel(s, d),
+      Some(EmbeddingQueries.outliersByLabelSql)),
+    Query("stats_anova_priority", Relational.anovaPriority,
+      Some(Relational.anovaPrioritySql)),
+    Query("stats_levene", Relational.levenePriority, Some(Relational.levenePrioritySql)),
+    Query("stats_mcnemar", Relational.mcnemarYears, Some(Relational.mcnemarYearsSql)),
+    Query("stats_wilcoxon_signed", Drift.wilcoxonSignedRank,
+      Some(Drift.wilcoxonSignedRankSql)),
+    Query("stats_friedman", Drift.friedman, Some(Drift.friedmanSql)),
+    Query("stats_cochran_armitage", Relational.cochranArmitage,
+      Some(Relational.cochranArmitageSql)),
+    Query("stats_kruskal_wallis", Relational.kruskalWallis,
+      Some(Relational.kruskalWallisSql)),
+    Query("stats_dunn_pairs", Relational.dunnPairs, Some(Relational.dunnPairsSql)),
+    Query("stats_tukey_hsd", Relational.tukeyHsd, Some(Relational.tukeyHsdSql)),
+    Query("stats_bartlett", Relational.bartlett, Some(Relational.bartlettSql)),
+    Query("stats_mood_median", Relational.moodMedian, Some(Relational.moodMedianSql)),
+    Query("eval_roc_auc", Evaluation.rocAuc, Some(Evaluation.rocAucSql)),
+    Query("eval_average_precision", Evaluation.averagePrecision,
+      Some(Evaluation.averagePrecisionSql)),
+    Query("eval_calibration", Evaluation.calibration, Some(Evaluation.calibrationSql)),
+    Query("eval_self_retrieval_mrr", (s, d) => Evaluation.selfRetrievalMrr(s, d),
+      Some(Evaluation.selfRetrievalMrrSql())),
+    Query("eval_ndcg", (s, d) => Evaluation.ndcg(s, d), Some(Evaluation.ndcgSql())),
+    Query("text_jsd_langs", (s, d) => TextQueries.jsdLangs(s, d),
+      Some(TextQueries.jsdLangsSql)),
+    Query("docs_simpson_diversity", TextQueries.simpsonDiversity,
+      Some(TextQueries.simpsonDiversitySql)),
+    Query("docs_hapax_share", TextQueries.hapaxShare, Some(TextQueries.hapaxShareSql)),
+    Query("docs_yule_k", TextQueries.yuleK, Some(TextQueries.yuleKSql)),
+    Query("docs_mattr", (s, d) => TextQueries.mattr(s, d), Some(TextQueries.mattrSql())),
+    Query("text_gopher_repetition", TextQueries.gopherRepetition,
+      Some(TextQueries.gopherRepetitionSql)),
+    Query("text_good_turing", (s, d) => TextQueries.goodTuring(s, d),
+      Some(TextQueries.goodTuringSql())),
+    Query("text_word_burstiness", (s, d) => TextQueries.wordBurstiness(s, d),
+      Some(TextQueries.wordBurstinessSql())),
+    Query("text_langid_prf", TextQueries.langIdPrf, Some(TextQueries.langIdPrfSql)),
+    Query("stats_cohens_kappa", TextQueries.cohensKappa,
+      Some(TextQueries.cohensKappaSql)),
+    Query("docs_heaps_law", (s, d) => TextQueries.heapsLaw(s, d),
+      Some(TextQueries.heapsLawSql())),
+    Query("events_burstiness", EventQueries.burstiness, Some(EventQueries.burstinessSql)),
+    Query("ts_mann_kendall", TimeSeries.mannKendall, Some(TimeSeries.mannKendallSql)),
+    Query("ts_seasonal_mann_kendall", TimeSeries.seasonalMannKendall,
+      Some(TimeSeries.seasonalMannKendallSql)),
+    Query("events_unattributed", EventQueries.unattributedPurchases,
+      Some(EventQueries.unattributedPurchasesSql)),
+    Query("graph_kcore", (s, d) => GraphQueries.kcorePeel(s, d),
+      Some(GraphQueries.kcorePeelSql), Warm.TimedSf),
+    Query("stats_hhi_nation", Relational.hhiNation, Some(Relational.hhiNationSql)),
+    Query("events_user_entropy", EventQueries.userEntropy,
+      Some(EventQueries.userEntropySql)),
+    Query("stats_mutual_info", EventQueries.mutualInfo, Some(EventQueries.mutualInfoSql)),
+    Query("sample_poisson_bootstrap", (s, d) => Sampling.poissonBootstrap(s, d),
+      Some(Sampling.poissonBootstrapSql)),
+    Query("text_doc_keywords", (s, d) => TextQueries.docKeywords(s, d),
+      Some(TextQueries.docKeywordsSql)),
+    Query("ts_runs_test", TimeSeries.runsTest, Some(TimeSeries.runsTestSql)),
+    Query("ts_spearman", TimeSeries.spearmanDaily, Some(TimeSeries.spearmanDailySql)),
+    Query("ts_kendall_tau", TimeSeries.kendallTau, Some(TimeSeries.kendallTauSql)),
+    Query("ts_turning_points", TimeSeries.turningPoints,
+      Some(TimeSeries.turningPointsSql)),
+    Query("ts_variance_ratio", (s, d) => TimeSeries.varianceRatio(s, d),
+      Some(TimeSeries.varianceRatioSql())),
+    Query("graph_clustering_coeff", GraphQueries.clusteringCoeff,
+      Some(GraphQueries.clusteringCoeffSql)),
+    Query("graph_link_jaccard", (s, d) => GraphQueries.linkJaccard(s, d),
+      Some(GraphQueries.linkJaccardSql)),
+    // beyond-broadcast twin: adjacency consumed via shuffled hash
+    // joins — same oracle, so the driver proves mode equality
+    Query("graph_link_jaccard_partitioned",
+      (s, d) => GraphQueries.linkJaccard(s, d, 20, broadcastAdj = false),
+      Some(GraphQueries.linkJaccardSql)),
+    Query("graph_resource_alloc", (s, d) => GraphQueries.resourceAlloc(s, d),
+      Some(GraphQueries.resourceAllocSql)),
+    Query("graph_resource_alloc_partitioned",
+      (s, d) => GraphQueries.resourceAlloc(s, d, 20, broadcastAdj = false),
+      Some(GraphQueries.resourceAllocSql)),
+    Query("graph_adamic_adar", (s, d) => GraphQueries.adamicAdar(s, d),
+      Some(GraphQueries.adamicAdarSql)),
+    Query("graph_adamic_adar_partitioned",
+      (s, d) => GraphQueries.adamicAdar(s, d, 20, broadcastAdj = false),
+      Some(GraphQueries.adamicAdarSql)),
+    Query("graph_common_neighbors", (s, d) => GraphQueries.commonNeighbors(s, d),
+      Some(GraphQueries.commonNeighborsSql)),
+    Query("graph_pref_attachment", (s, d) => GraphQueries.prefAttachment(s, d),
+      Some(GraphQueries.prefAttachmentSql)),
+    Query("graph_katz_walks", (s, d) => GraphQueries.katzWalks(s, d),
+      Some(GraphQueries.katzWalksSql)),
+    Query("graph_degree_histogram", GraphQueries.degreeHistogram,
+      Some(GraphQueries.degreeHistogramSql)),
+    Query("graph_rich_club", GraphQueries.richClub, Some(GraphQueries.richClubSql)),
+    Query("graph_local_bridges", (s, d) => GraphQueries.localBridges(s, d),
+      Some(GraphQueries.localBridgesSql)),
+    Query("graph_hits_walks", (s, d) => GraphQueries.hitsWalks(s, d),
+      Some(GraphQueries.hitsWalksSql)),
+    Query("dedup_containment", (s, d) => TextQueries.dedupContainment(s, d),
+      Some(TextQueries.dedupContainmentSql)),
+    Query("drift_mann_whitney", Drift.mannWhitney, Some(Drift.mannWhitneySql)),
+    Query("events_funnel_within", (s, d) => EventQueries.funnelWithin(s, d),
+      Some(EventQueries.funnelWithinSql)),
+    Query("unpivot_metrics", Relational.unpivotMetrics,
+      Some(Relational.unpivotMetricsSql)),
+    Query("stats_weighted_median", Relational.weightedMedian,
+      Some(Relational.weightedMedianSql)),
+    Query("governance_delete_impact", Governance.deleteImpact,
+      Some(Governance.deleteImpactSql)),
+    Query("text_vocab_coverage", (s, d) => TextQueries.vocabCoverage(s, d),
+      Some(TextQueries.vocabCoverageSql)),
+    // dataset governance
+    Query("dq_expectations", Governance.dqExpectations,
+      Some(Governance.dqExpectationsSql)),
+    Query("pii_k_anonymity", (s, d) => Governance.kAnonymity(s, d),
+      Some(Governance.kAnonymitySql)),
+    Query("pii_l_diversity", (s, d) => Governance.lDiversity(s, d),
+      Some(Governance.lDiversitySql())),
+    Query("pii_t_closeness", (s, d) => Governance.tCloseness(s, d),
+      Some(Governance.tClosenessSql())),
+    Query("split_leakage_audit", Governance.splitLeakageAudit,
+      Some(Governance.splitLeakageAuditSql)),
+    Query("pareto_frontier", Governance.paretoFrontier,
+      Some(Governance.paretoFrontierSql)),
+    Query("winsorize_stats", Governance.winsorizeStats,
+      Some(Governance.winsorizeStatsSql)),
+    Query("split_balance_chisq", Governance.splitBalanceChisq,
+      Some(Governance.splitBalanceChisqSql)),
+    Query("embed_hard_negatives", (s, d) => EmbeddingQueries.hardNegatives(s, d),
+      Some(EmbeddingQueries.hardNegativesSql)),
+    Query("join_size_estimate", EventQueries.joinSizeEstimateAudit,
+      Some(EventQueries.joinSizeEstimateAuditSql)),
+    Query("drift_psi", (s, d) => Drift.psi(s, d), Some(Drift.psiSql)),
+    Query("drift_ks", Drift.ks, Some(Drift.ksSql)),
+    Query("graph_modularity", GraphQueries.modularity, Some(GraphQueries.modularitySql)),
+    Query("attribution_time_decay", EventQueries.attributionTimeDecay,
+      Some(EventQueries.attributionTimeDecaySql)),
+    Query("dq_functional_deps", Governance.functionalDeps,
+      Some(Governance.functionalDepsSql)),
+    Query("pii_dp_release", Governance.dpRelease, Some(Governance.dpReleaseSql)),
+    Query("corpus_datacard", Governance.datacard, Some(Governance.datacardSql)),
+    // text analysis
+    Query("text_token_count", TextQueries.tokenCount, Some(TextQueries.tokenCountSql)),
+    Query("text_token_bpeish", TextQueries.tokenCountBpe,
+      Some(TextQueries.tokenCountBpeSql)),
+    Query("text_tokenizer_fertility", TextQueries.tokenizerFertility,
+      Some(TextQueries.tokenizerFertilitySql)),
+    Query("text_ngram_diversity", TextQueries.ngramDiversity,
+      Some(TextQueries.ngramDiversitySql)),
+    Query("text_winnow_fp", TextQueries.winnowFingerprint,
+      Some(TextQueries.winnowFingerprintSql)),
+    Query("text_stats_by_lang", TextQueries.statsByLang,
+      Some(TextQueries.statsByLangSql)),
+    Query("text_quality_score", TextQueries.qualityScore,
+      Some(TextQueries.qualityScoreSql)),
+    Query("text_quality_funnel", TextQueries.qualityFunnel,
+      Some(TextQueries.qualityFunnelSql)),
+    Query("text_char_entropy", TextQueries.charEntropy, Some(TextQueries.charEntropySql)),
+    Query("text_bigram_entropy_rate", TextQueries.bigramEntropyRate,
+      Some(TextQueries.bigramEntropyRateSql)),
+    Query("text_vocab_overlap", (s, d) => TextQueries.vocabOverlap(s, d),
+      Some(TextQueries.vocabOverlapSql())),
+    Query("docs_length_ks_pairs", TextQueries.lengthKsPairs,
+      Some(TextQueries.lengthKsPairsSql)),
+    Query("text_lang_guess", TextQueries.langGuessConfusion,
+      Some(TextQueries.langGuessConfusionSql)),
+    Query("text_fingerprint", TextQueries.fingerprint, Some(TextQueries.fingerprintSql)),
+    Query("text_scrub_pii", TextQueries.scrubPii, Some(TextQueries.scrubPiiSql)),
+    Query("text_repetition", TextQueries.repetitionStats,
+      Some(TextQueries.repetitionStatsSql)),
+    Query("text_top_terms", TextQueries.topTermsByDf, Some(TextQueries.topTermsByDfSql)),
+    Query("text_regex_extract", TextQueries.regexExtract,
+      Some(TextQueries.regexExtractSql)),
+    Query("text_first_positions", TextQueries.firstPositions,
+      Some(TextQueries.firstPositionsSql)),
+    Query("dedup_incremental", TextQueries.dedupIncremental,
+      Some(TextQueries.dedupIncrementalSql)),
+    Query("text_bigrams", TextQueries.bigrams, Some(TextQueries.bigramsSql)),
+    Query("text_bigram_pmi", (s, d) => TextQueries.bigramPmi(s, d),
+      Some(TextQueries.bigramPmiSql())),
+    Query("text_trigram_lm", TextQueries.trigramLm, Some(TextQueries.trigramLmSql)),
+    Query("docs_source_concentration", TextQueries.sourceConcentration,
+      Some(TextQueries.sourceConcentrationSql)),
+    Query("text_normalize", TextQueries.normalizeText,
+      Some(TextQueries.normalizeTextSql)),
+    Query("docs_chunk_sliding", TextQueries.chunkSliding,
+      Some(TextQueries.chunkSlidingSql)),
+    Query("text_bm25_terms", TextQueries.bm25TopTerms, Some(TextQueries.bm25TopTermsSql)),
+    Query("index_inverted", TextQueries.invertedIndex,
+      Some(TextQueries.invertedIndexSql)),
+    Query("sketch_word_freq", TextQueries.sketchWordFreqAudit,
+      Some(TextQueries.sketchWordFreqAuditSql)),
+    Query("curation_pipeline", TextQueries.curationPipeline,
+      Some(TextQueries.curationPipelineSql)),
+    Query("text_bpe_merge", TextQueries.bpeMergeStep, Some(TextQueries.bpeMergeStepSql)),
+    Query("text_bpe_train", (s, d) => TextQueries.bpeTrain(s, d), None),
+    Query("text_bpe_encode", (s, d) => TextQueries.bpeEncodeAudit(s, d),
+      Some(TextQueries.bpeEncodeAuditSql)),
+    Query("text_perplexity", TextQueries.perplexity, Some(TextQueries.perplexitySql)),
+    Query("text_ccnet_buckets", TextQueries.ccnetBuckets,
+      Some(TextQueries.ccnetBucketsSql)),
+    Query("text_tfidf_terms", TextQueries.tfidfTerms, Some(TextQueries.tfidfTermsSql)),
+    Query("events_value_mad", EventQueries.valueMad, Some(EventQueries.valueMadSql)),
+    Query("events_value_mad_approx", (s, d) => EventQueries.valueMadApproxAudit(s, d),
+      Some(EventQueries.valueMadApproxAuditSql)),
+    Query("sketch_hll_rollup", EventQueries.hllRollupAudit,
+      Some(EventQueries.hllRollupAuditSql)),
+    Query("sketch_hll_intersect", EventQueries.hllIntersectAudit,
+      Some(EventQueries.hllIntersectAuditSql)),
+    Query("sketch_topk_rollup", (s, d) => EventQueries.topkRollupAudit(s, d),
+      Some(EventQueries.topkRollupAuditSql)),
+    // dataset management: deterministic splits / samples / skew diagnosis
+    Query("sample_hash_split", Sampling.hashSplit, Some(Sampling.hashSplitSql)),
+    Query("sample_stratified", Sampling.stratifiedSample,
+      Some(Sampling.stratifiedSampleSql)),
+    Query("sample_systematic", Sampling.systematicSample,
+      Some(Sampling.systematicSampleSql)),
+    Query("sample_weighted", (s, d) => Sampling.weightedSample(s, d),
+      Some(Sampling.weightedSampleSql)),
+    Query("sample_neyman_allocation", (s, d) => Sampling.neymanAllocation(s, d),
+      Some(Sampling.neymanAllocationSql)),
+    Query("events_skew_histogram", Sampling.skewHistogram,
+      Some(Sampling.skewHistogramSql)),
+    Query("decontaminate_ngram", Sampling.decontaminate, Some(Sampling.decontaminateSql)),
+    Query("decontaminate_bloom", Sampling.decontaminateBloomAudit,
+      Some(Sampling.decontaminateBloomAuditSql), Warm.SmallSf),
+    Query("pack_chunks", (s, d) => Sampling.packChunks(s, d),
+      Some(Sampling.packChunksSql)),
+    Query("mixture_downsample", Sampling.mixtureDownsample,
+      Some(Sampling.mixtureDownsampleSql)),
+    // dedup
+    Query("dedup_exact", TextQueries.dedupExact, Some(TextQueries.dedupExactSql)),
+    Query("dedup_exact_paragraph", (s, d) => TextQueries.dedupExactParagraph(s, d),
+      Some(TextQueries.dedupExactParagraphSql())),
+    Query("dedup_paragraph_top", (s, d) => TextQueries.dedupParagraphTop(s, d),
+      Some(TextQueries.dedupParagraphTopSql())),
+    Query("dedup_paragraph_savings", (s, d) => TextQueries.dedupParagraphSavings(s, d),
+      Some(TextQueries.dedupParagraphSavingsSql())),
+    Query("dedup_exact_substring", (s, d) => TextQueries.exactSubstringDedup(s, d),
+      Some(TextQueries.exactSubstringDedupSql), Warm.SmallSf),
+    Query("dedup_cluster_sizes", TextQueries.dedupClusterSizes,
+      Some(TextQueries.dedupClusterSizesSql)),
+    Query("dedup_ngram_jaccard", (s, d) => TextQueries.dedupNgramJaccard(s, d),
+      Some(TextQueries.dedupNgramJaccardSql)),
+    Query("dedup_prefix_jaccard", (s, d) => TextQueries.dedupPrefixJaccard(s, d),
+      Some(TextQueries.dedupPrefixJaccardSql)),
+    Query("dedup_components", graft.llm.DedupClusters.dedupComponents,
+      Some(graft.llm.DedupClusters.dedupComponentsSql)),
+    Query("dedup_keep_best", graft.llm.DedupClusters.dedupKeepBest,
+      Some(graft.llm.DedupClusters.dedupKeepBestSql)),
+    Query("dedup_minhash_lsh", (s, d) => MinHashDedup.nearDupPairsAudit(s, d),
+      Some(graft.llm.MinHashDedup.nearDupPairsAuditSql)),
+    Query("dedup_lsh_bucket_audit", (s, d) => MinHashDedup.bucketConservationAudit(s, d),
+      Some(MinHashDedup.bucketConservationAuditSql)),
+    Query("dedup_minhash_signatures", MinHashDedup.signatureAudit,
+      Some(MinHashDedup.signatureAuditSql)),
+    Query("dedup_simhash", (s, d) => SimHashDedup.nearDupPairsAudit(s, d),
+      Some(graft.llm.SimHashDedup.nearDupPairsAuditSql)),
+    // similarity search
+    Query("ann_topk_cosine", EmbeddingQueries.annTopK, Some(EmbeddingQueries.annTopKSql)),
+    Query("embed_intrinsic_dim", (s, d) => EmbeddingQueries.intrinsicDim(s, d),
+      Some(EmbeddingQueries.intrinsicDimSql())),
+    Query("ann_topk_cosine_i8", (s, d) => EmbeddingQueries.annTopKI8(s, d),
+      Some(EmbeddingQueries.annTopKI8Sql)),
+    Query("ann_ivf_topk", (s, d) => EmbeddingQueries.annIvfAudit(s, d),
+      Some(EmbeddingQueries.annAuditSql), Warm.SmallSf),
+    Query("ann_pq_topk", (s, d) => EmbeddingQueries.annPqAudit(s, d),
+      Some(EmbeddingQueries.annAuditSql)),
+    Query("ann_ivfpq_topk", (s, d) => EmbeddingQueries.annIvfPqAudit(s, d),
+      Some(EmbeddingQueries.annAuditSql), Warm.SmallSf),
+    Query("embed_neardup_lsh", (s, d) => EmbeddingQueries.nearDupLshAudit(s, d),
+      Some(EmbeddingQueries.nearDupLshAuditSql)),
+    Query("embed_knn_graph", (s, d) => EmbeddingQueries.knnGraph(s, d),
+      Some(EmbeddingQueries.knnGraphSql)),
+    Query("embed_mmr_topk", (s, d) => EmbeddingQueries.mmrTopK(s, d),
+      Some(EmbeddingQueries.mmrTopKSql)),
+    Query("embed_semdedup", (s, d) => EmbeddingQueries.semDedupAudit(s, d),
+      Some(EmbeddingQueries.semDedupAuditSql)),
+    Query("embed_centroid_by_label", EmbeddingQueries.centroidByLabel,
+      Some(EmbeddingQueries.centroidByLabelSql)),
+    Query("embed_silhouette", EmbeddingQueries.silhouette,
+      Some(EmbeddingQueries.silhouetteSql)),
+    Query("embed_norm_quantiles", EmbeddingQueries.normQuantilesByLabel,
+      Some(EmbeddingQueries.normQuantilesByLabelSql)),
+    Query("embed_dim_ablation", EmbeddingQueries.dimAblation,
+      Some(EmbeddingQueries.dimAblationSql)),
+    Query("embed_threshold_sweep", EmbeddingQueries.thresholdSweep,
+      Some(EmbeddingQueries.thresholdSweepSql)),
+    Query("embed_pca_project", (s, d) => EmbeddingQueries.pcaProjectAudit(s, d),
+      Some(EmbeddingQueries.pcaProjectAuditSql)),
+    Query("embed_pca_explained", (s, d) => EmbeddingQueries.pcaExplainedAudit(s, d),
+      Some(EmbeddingQueries.pcaExplainedAuditSql())),
+    // multimodal
+    Query("multimodal_meta", Multimodal.mediaMeta, Some(Multimodal.mediaMetaSql)),
+    Query("multimodal_dedup", Multimodal.mediaDedup, Some(Multimodal.mediaDedupSql)),
+    Query("multimodal_cdc_chunks", (s, d) => Multimodal.cdcChunkAudit(s, d),
+      Some(Multimodal.cdcChunkAuditSql)),
+    Query("multimodal_cdc_pairs", (s, d) => Multimodal.cdcPairsAudit(s, d),
+      Some(Multimodal.cdcPairsAuditSql())),
+    Query("multimodal_decode_stub", Multimodal.decodeFrames, None),
+    Query("multimodal_frame_sample", (s, d) => Multimodal.sampleFrames(s, d), None),
   )
+
+  /** [[registry]] by name, for callers that look a query up by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  /** Every oracle in [[registry]], keyed by query name (Verify's
+    * `oracle_sql.json`).
+    */
+  lazy val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }

@@ -27,9 +27,10 @@ import org.apache.spark.sql.types.StructType
   *    open is `spark.read.schema(cached)`, which runs no job.
   *  - Inference depends on the session's parquet-read confs
   *    (`spark.sql.legacy.parquet.nanosAsLong`, binary-as-string, ...).
-  *    They are set once by the session owner (Bench/QBench/Verify/test
-  *    builders); a query builder must not mutate them on a live
-  *    session, or a cached schema would disagree with a fresh one.
+  *    They are set once by the session owner ([[Sessions.local]] for
+  *    the mains, the test and benchmark-harness builders); a query
+  *    builder must not mutate them on a live session, or a cached
+  *    schema would disagree with a fresh one.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -109,8 +110,9 @@ object Tables {
     *  - TIMESTAMP(NANOS), which Spark 4.1 refuses to read as a
     *    timestamp ([PARQUET_TYPE_ILLEGAL]): with
     *    `spark.sql.legacy.parquet.nanosAsLong=true` on the session
-    *    (set once by the session owner — Bench/QBench/Verify/test
-    *    builders all do; a query builder must not mutate session conf)
+    *    (set once by the session owner — [[Sessions.local]], the test
+    *    and harness builders all do; a query builder must not mutate
+    *    session conf)
     *    the column arrives as a nanos-since-epoch LONG and is floored
     *    to microseconds — `timestamp_micros(ns div 1000)` — matching
     *    DuckDB's `ts::TIMESTAMP` truncation bit-for-bit (verified

@@ -1,14 +1,14 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.registry result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Crash posture (r15 post-mortem: the round's bench JVM died with exit
   * 56 = ExecutorExitCode.HEARTBEAT_FAILURE and the round's correctness
   * artifact arrived empty): oracle_sql.json is written FIRST so a
   * mid-suite death never zeroes the compare inputs; the local[*]
-  * heartbeat self-kill is disarmed in the session builder; a stopped
+  * heartbeat self-kill is disarmed by [[Sessions.local]]; a stopped
   * SparkContext is detected per-query and the session rebuilt so one
   * death costs one query; and a per-query status line is flushed to
   * `outDir/verify_rows.jsonl` as each dump completes, so even a hard
@@ -22,25 +22,7 @@ object Verify {
       case Array(a, b)    => (a, b, None)
       case Array(a, b, c) => (a, b, Some(c.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    def buildSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        // disarm the in-process executor's heartbeat System.exit —
-        // pure downside in local[*]; see Bench.scala for the full r15
-        // exit-56 rationale
-        .config("spark.executor.heartbeatInterval", "60s")
-        .config("spark.network.timeout", "600s")
-        .config("spark.executor.heartbeat.maxFailures", "10000")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+    def buildSession(): SparkSession = Sessions.local(cacheEdges = false)
     var spark = buildSession()
     var rebuilds = 0
     def ensureLive(): SparkSession = {

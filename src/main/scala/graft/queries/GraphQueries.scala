@@ -214,57 +214,20 @@ object GraphQueries {
     }
 
   /** ONE family-wide partition count for every graph-side materialized
-    * layout. Default: the session `spark.sql.shuffle.partitions`,
-    * UNCHANGED — a data-derived count was built and A/B-measured this
-    * round (r18) and LOST on the 10× corpus at local[32]:
-    *
-    *   10× rep2 walls      parts=32   parts≈95 (derived, session 32)
-    *   graph_sssp              6.67      10.46
-    *   graph_khop_reach        5.01       7.91
-    *   graph_adamic_adar_p    21.53      24.48
-    *   and with the SESSION count raised to match (32 / 64 / 96):
-    *   graph_sssp              6.67 / 10.09 / 13.21
-    *   graph_adamic_adar_p    21.53 / 23.19 / 52.50
-    *
-    * Two mechanisms, both measured: (a) a declared count ≠ the session
-    * count forces EnsureRequirements to re-exchange the OTHER side of
-    * every iterate join to the declared count — the exact shuffle the
-    * declarations exist to delete; (b) raising the session count too
-    * is monotonically worse because after the r17 structural fixes no
-    * graph stage spills at 10×, so extra partitions are pure task-wave
-    * + fixed-cost overhead on a 32-core host (r16's "doubling helped"
-    * 90→30 s reading was SPILL relief that no longer exists). On a
-    * fixed-core host, partitions = cores wins once nothing spills; on
-    * a real cluster you size the SESSION conf to the fleet and this
-    * function follows it automatically.
-    *
-    * The derivation stays available, conf-gated OFF
-    * (`spark.graft.graph.partBytesMultiplier`, default 0 = disabled):
-    *
-    *   derived = ceil(lineitemBytes × multiplier / advisorySize)
-    *   n       = clamp(derived, sessionShufflePartitions, 64×session)
-    *
-    * for a deployment that measures the opposite trade (e.g. executor
-    * memory small enough that the wedge exchange spills again). If it
-    * is ever enabled, every [[Graft.materializeHashed]] site in this
-    * family MUST keep using this one count — see mechanism (a).
+    * layout: the session `spark.sql.shuffle.partitions`. A data-derived
+    * count was built and A/B-measured (r18) and LOST on the 10× corpus
+    * at local[32] (graph_sssp 6.67 s at 32 parts vs 10.46 s derived,
+    * graph_adamic_adar_partitioned 21.53 vs 24.48 s): a declared count ≠
+    * the session count forces EnsureRequirements to re-exchange the
+    * OTHER side of every iterate join, and raising the session count
+    * too only adds task-wave overhead once nothing spills. On a
+    * fixed-core host, partitions = cores wins; on a real cluster you
+    * size the SESSION conf to the fleet and this follows it. Every
+    * [[Graft.materializeHashed]] site in this family must use this one
+    * count.
     */
-  private[graft] def graphParts(s: SparkSession, dir: String): Int = {
-    val floor = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val mult = s.conf.get("spark.graft.graph.partBytesMultiplier", "0").toDouble
-    if (mult <= 0) return floor
-    val advisory = math.max(1L,
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")))
-    val bytes =
-      try {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-        p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(p).getLength
-      } catch { case _: Throwable => 0L }
-    val derived = math.ceil(bytes * mult / advisory).toLong
-    math.max(floor.toLong, math.min(derived, floor * 64L)).toInt
-  }
+  private[graft] def graphParts(s: SparkSession): Int =
+    s.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
   /** [[Graft.materializeHashed]] with the family count when the caller
     * resolved one (nParts > 0), else the session default — for the
@@ -302,7 +265,7 @@ object GraphQueries {
     // to reliable `.checkpoint()` when iterations are many or
     // executors preemptible.
     val adj = Graft.materializeHashed(edges.join(deg, "src"),
-      graphParts(s, dir), Seq("src"))
+      graphParts(s), Seq("src"))
 
     // initial ranks FROM THE CHECKPOINT (deriving them from `deg`
     // would silently recompute the whole scan→join→distinct edge
@@ -530,7 +493,7 @@ object GraphQueries {
     val edges = tradeEdges(s, dir)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
     val adj = Graft.materializeHashed(edges.join(deg, "src"),
-      graphParts(s, dir), Seq("src"))
+      graphParts(s), Seq("src"))
     // node list is consumed once per iteration (the left join that
     // re-adds teleport mass) — materialize so the distinct doesn't
     // re-run over the adjacency four times; hash-declared on node so
@@ -538,7 +501,7 @@ object GraphQueries {
     // re-exchanging the vector every round
     val nodes = Graft.materializeHashed(
       adj.select(col("src").as("node")).distinct(),
-      graphParts(s, dir), Seq("node"))
+      graphParts(s), Seq("node"))
     val isSeed = col("node").isin(seeds: _*)
     var ranks = nodes.select(col("node"),
       when(isSeed, lit(restartU)).otherwise(lit(0L)).as("pr_u"))
@@ -707,7 +670,7 @@ object GraphQueries {
   def triangleCount(s: SparkSession, dir: String,
                     broadcastAdj: Boolean): DataFrame =
     triangleCountOn(copurchaseEdges(s, dir), broadcastAdj,
-      graphParts(s, dir))
+      graphParts(s))
 
   /** Degree-oriented sorted-intersect triangle core over a prebuilt
     * canonical edge set (see [[triangleCount]] for the plan notes).
@@ -783,7 +746,7 @@ object GraphQueries {
     */
   def khopReach(s: SparkSession, dir: String,
                 hops: Int = 3, seedMax: Long = 10): DataFrame = {
-    val np = graphParts(s, dir)
+    val np = graphParts(s)
     val edges = Graft.materializeHashed(tradeEdges(s, dir), np, Seq("src"))
     val seeds = Tables.load(s, dir, "customer")
       .filter(col("c_custkey") <= seedMax)
@@ -997,7 +960,7 @@ object GraphQueries {
       col("src"),
       col("dst"),
       expr("1000000L div n_ord").as("w"))
-    val np = graphParts(s, dir)
+    val np = graphParts(s)
     val edges = Graft.materializeHashed(
       half.unionByName(
         half.select(col("dst").as("src"), col("src").as("dst"), col("w"))),
@@ -1072,7 +1035,7 @@ object GraphQueries {
     */
   def labelPropagation(s: SparkSession, dir: String,
                        rounds: Int = 3): DataFrame = {
-    val np = graphParts(s, dir)
+    val np = graphParts(s)
     val edges = Graft.materializeHashed(tradeEdges(s, dir), np, Seq("src"))
     // node ids are longs; the LABEL stays the public "c…"/"s…" STRING
     // so the min-label tie-break keeps its original string ordering
@@ -1291,7 +1254,7 @@ object GraphQueries {
       sum(expr("deg * (deg - 1) div 2")).as("n_wedges"))
     val tri = triangleCountOn(edges,
       s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean,
-      graphParts(s, dir))
+      graphParts(s))
       .select(col("n_triangles"))
     tri.crossJoin(broadcast(wedges))
       .select(col("n_triangles"), col("n_wedges"),
@@ -1354,7 +1317,7 @@ object GraphQueries {
 
   def linkJaccard(s: SparkSession, dir: String, k: Int,
                   broadcastAdj: Boolean): DataFrame =
-    commonCounts(copurchaseEdges(s, dir), broadcastAdj, graphParts(s, dir))
+    commonCounts(copurchaseEdges(s, dir), broadcastAdj, graphParts(s))
       .select(col("u"), col("v"), col("common"),
         (col("common").cast("double")
           / (col("du") + col("dv") - col("common")).cast("double"))
@@ -1419,7 +1382,7 @@ object GraphQueries {
 
   def commonNeighbors(s: SparkSession, dir: String, k: Int,
                       broadcastAdj: Boolean): DataFrame =
-    commonCounts(copurchaseEdges(s, dir), broadcastAdj, graphParts(s, dir))
+    commonCounts(copurchaseEdges(s, dir), broadcastAdj, graphParts(s))
       .filter(col("common") > 0)
       .select(col("u"), col("v"), col("common"), col("du"), col("dv"))
       .orderBy(col("common").desc, col("u"), col("v"))
@@ -1569,7 +1532,7 @@ object GraphQueries {
                                 broadcastAdj: Boolean, weight: Column,
                                 outName: String): DataFrame =
     weightedLinkScoreOn(copurchaseEdges(s, dir), k, broadcastAdj, weight,
-      outName, graphParts(s, dir))
+      outName, graphParts(s))
 
   private[graft] def weightedLinkScoreOn(edges: DataFrame, k: Int,
                                          broadcastAdj: Boolean, weight: Column,
@@ -1913,7 +1876,7 @@ object GraphQueries {
 
   def localBridges(s: SparkSession, dir: String, k: Int,
                    broadcastAdj: Boolean): DataFrame =
-    commonCounts(copurchaseEdges(s, dir), broadcastAdj, graphParts(s, dir))
+    commonCounts(copurchaseEdges(s, dir), broadcastAdj, graphParts(s))
       .filter(col("common") === 0)
       .select(col("u"), col("v"), col("du"), col("dv"),
         (col("du") * col("dv")).as("strength"))

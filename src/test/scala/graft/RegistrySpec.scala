@@ -1,14 +1,41 @@
 package graft
 
-/** Registry invariants: every oracle row names a registered query (a
-  * typo'd key would silently become a skipped check, not a failure),
-  * and the flagship entry returns rows (the driver's smoke contract).
+import graft.SparkEntry.{registry, Warm}
+
+/** Registry invariants: one record per name (a repeated name would
+  * silently shadow a query in the by-name views), the rows-only set is
+  * exactly the adjudicated five, every oracle is real SQL, every SmallSf
+  * warm-up builds at the smoke scale factor, and the flagship entry
+  * returns rows (the driver's smoke contract).
   */
 class RegistrySpec extends SparkSpec {
 
-  test("every oracleSql key is a registered query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle rows without a query: $orphans")
+  test("registry names are unique") {
+    val dupes = registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dupes.isEmpty, s"names registered twice: ${dupes.toSeq.sorted}")
+  }
+
+  test("the rows-only set is exactly the five adjudicated entries") {
+    assert(registry.filter(_.oracle.isEmpty).map(_.name).toSet == Set(
+      "compaction_plan", "dolar_e2e_stream_pt", "multimodal_decode_stub",
+      "multimodal_frame_sample", "text_bpe_train"))
+  }
+
+  test("every oracle SQL is non-blank") {
+    val blank = registry.collect { case q if q.oracle.exists(_.trim.isEmpty) => q.name }
+    assert(blank.isEmpty, s"blank oracle SQL: $blank")
+  }
+
+  test("every SmallSf warm-up query runs at the smoke scale factor") {
+    // Bench warms these at sf0.001 and only logs a failure, so a broken
+    // warm build would otherwise cost warmth silently, round after round
+    val small = registry.filter(_.warm == Warm.SmallSf)
+    assert(small.nonEmpty)
+    val failed = small.flatMap { q =>
+      try { q.build(spark, sf).write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Exception => Some(s"${q.name}: $e") }
+    }
+    assert(failed.isEmpty, failed.mkString("; "))
   }
 
   test("query names are stable snake_case identifiers") {

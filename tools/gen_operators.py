@@ -18,23 +18,40 @@ import sys
 SRC = "src/main/scala/graft/SparkEntry.scala"
 
 
-def registry_entries():
-    """[(name, impl_expr)] in registration order, from the queries map."""
+def split_args(text, i):
+    """Top-level comma-separated args of the call whose `(` is text[i-1],
+    and the index just past its closing `)`."""
+    args, depth, cur, quote = [], 0, "", False
+    while True:
+        c = text[i]
+        i += 1
+        if c == '"':
+            quote = not quote
+        elif not quote and c in "([{":
+            depth += 1
+        elif not quote and c in ")]}":
+            if depth == 0:
+                args.append(cur)
+                return [" ".join(a.split()) for a in args], i
+            depth -= 1
+        elif not quote and c == "," and depth == 0:
+            args.append(cur)
+            cur = ""
+            continue
+        cur += c
+
+
+def registry():
+    """[(name, build_expr, has_oracle)] in registration order, from the
+    `Query(name, build, oracle[, warm])` records of SparkEntry.registry."""
     src = open(SRC).read()
-    block = src[src.index("def queries"):src.index("def oracleSql")]
-    # an entry runs from `"name" ->` to the `),` that closes it; the
-    # value expression is everything in between (possibly multi-line)
+    start = src.index("lazy val registry")
+    block = src[start:src.index("\n  )\n", start)]
     out = []
-    for m in re.finditer(r'"([A-Za-z0-9_]+)"\s*->\s*\(((?:[^()]|\([^()]*\))*)\)',
-                         block):
-        out.append((m.group(1), " ".join(m.group(2).split())))
+    for m in re.finditer(r"\bQuery\(", block):
+        args, _ = split_args(block, m.end())
+        out.append((args[0].strip('"'), args[1], args[2] != "None"))
     return out
-
-
-def oracle_keys():
-    src = open(SRC).read()
-    block = src[src.index("def oracleSql"):]
-    return set(re.findall(r'"([A-Za-z0-9_]+)"\s*->', block))
 
 
 def object_files():
@@ -77,8 +94,8 @@ def locate(impl_expr, objs):
         qual, meth = m.group(1).split(".")[-1], m.group(2)
         path = objs.get(qual)
     else:
-        # bare method defined in SparkEntry itself, e.g. `dolarE2e _`
-        bm = re.search(r"([a-zA-Z0-9_]+)\s*(?:_|\()", impl_expr)
+        # bare method defined in SparkEntry itself, e.g. `dolarE2e`
+        bm = re.search(r"([a-zA-Z0-9_]+)\s*(?:_|\(|$)", impl_expr)
         if not bm:
             return None
         meth, path = bm.group(1), SRC
@@ -96,17 +113,14 @@ def family(name):
 
 
 def main():
-    entries = registry_entries()
-    oks = oracle_keys()
     objs = object_files()
     rows, missing = [], []
-    for name, impl in entries:
+    for name, impl, has_oracle in registry():
         loc = locate(impl, objs)
         if loc is None:
             missing.append(name)
-            rows.append((name, "?", 0, "", name in oks))
         else:
-            rows.append((name, loc[0], loc[1], loc[2], name in oks))
+            rows.append((name, loc[0], loc[1], loc[2], has_oracle))
     if missing:
         sys.exit(f"could not locate implementations for: {missing}")
     n_oracle = sum(1 for r in rows if r[4])
@@ -118,7 +132,7 @@ def main():
         "",
         "<!-- GENERATED by tools/gen_operators.py - do not hand-edit. -->",
         "<!-- Regenerated by the close workflow; tools/update_claims.py "
-        "fails when this file's count drifts from SparkEntry.queries. -->",
+        "fails when this file's count drifts from SparkEntry.registry. -->",
         "",
         f"**{len(rows)} registered queries** ({n_oracle} oracle-checked "
         f"against DuckDB, {len(rows) - n_oracle} rows-only with a dedicated "
@@ -127,7 +141,7 @@ def main():
         f"first sentence.",
         "",
         "The rows-only residue is PERMANENT by adjudication (the five-class "
-        "rationale lives in `SparkEntry.oracleSql`'s scaladoc): "
+        "rationale lives in `SparkEntry.Query`'s scaladoc): "
         "`compaction_plan` reads Spark's physical file listing (no DuckDB "
         "analogue); `dolar_e2e_stream_pt` exists to exercise the live "
         "ProcessingTime trigger and duplicates the oracle-checked stream "

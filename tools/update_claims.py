@@ -30,17 +30,18 @@ import sys
 
 def registry_size():
     """Number of registered queries, parsed from the tree itself
-    (SparkEntry.scala's `queries` map) — the r14 lesson: a query landed
-    after the close-artifacts commit and the README said 359 in a
-    360-query tree. Counting the tree at update time (and failing when
-    the logs disagree, see main) makes that drift a build failure."""
+    (the `Query("name", ...)` records of SparkEntry.scala's `registry`)
+    — the r14 lesson: a query landed after the close-artifacts commit
+    and the README said 359 in a 360-query tree. Counting the tree at
+    update time (and failing when the logs disagree, see main) makes
+    that drift a build failure."""
     src = open("src/main/scala/graft/SparkEntry.scala").read()
-    start = src.index("def queries")
-    end = src.index("def oracleSql")
-    keys = re.findall(r'"([A-Za-z0-9_]+)"\s*->', src[start:end])
+    start = src.index("lazy val registry")
+    end = src.index("\n  )\n", start)
+    keys = re.findall(r'\bQuery\(\s*"([A-Za-z0-9_]+)"', src[start:end])
     if len(keys) != len(set(keys)):
         dupes = sorted(k for k in set(keys) if keys.count(k) > 1)
-        sys.exit(f"duplicate registry keys in SparkEntry.queries: {dupes}")
+        sys.exit(f"duplicate registry names in SparkEntry.registry: {dupes}")
     return len(keys)
 
 
@@ -97,7 +98,7 @@ def main(round_label, sbt_log, cmp_log, bench_table=None, bench_json=None):
     if total != tree_total:
         sys.exit(
             f"STALE LOGS: compare log covers {total} queries but "
-            f"SparkEntry.queries registers {tree_total} — rerun "
+            f"SparkEntry.registry registers {tree_total} — rerun "
             f"graft.Verify + compare_oracle.py on the current tree "
             f"before regenerating claims")
     # OPERATORS.md is generated from the same registry — hold it to the
