@@ -1,7 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.lang.management.ManagementFactory
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.LongAdder
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import JsonLines.quote
 
 /** Per-query JVM state snapshot, so a timing anomaly carries its own
   * diagnosis (r4: a contiguous band of 12 queries ran 10-600x steady
@@ -82,52 +93,214 @@ object JvmStats {
   }
 }
 
-/** Accumulates task-level execution metrics so a per-query snapshot can
-  * say whether a CPU burn happened INSIDE tasks (executor-side plan
-  * execution — would recur on a real cluster) or outside them
-  * (driver/JIT/listener overheads — local-harness artifacts).
+/** The per-row cost ledger. Jobs, stages and task metrics come from the
+  * SparkContext's bus (`addSparkListener`); analysis, optimizer and
+  * planning time from the phase tracker of each `QueryExecution` that
+  * runs an action (the session's `listenerManager`), so a builder's
+  * eager analysis of a frame it never runs shows only in `build_ms`.
+  * Attribution is serial: [[take]] returns everything delivered since
+  * the previous `take`, so draining the bus and taking before and after
+  * a row ([[Bench.measure]]) yields that row's work when nothing else
+  * runs on the context. Task CPU is kept apart from process CPU: a burn
+  * inside tasks would recur on a cluster, one outside them (driver,
+  * JIT, listeners) is a local-harness artifact.
   */
-class TaskMetricsListener extends org.apache.spark.scheduler.SparkListener {
-  val taskCpuNs = new java.util.concurrent.atomic.AtomicLong
-  val taskRunMs = new java.util.concurrent.atomic.AtomicLong
-  val nTasks = new java.util.concurrent.atomic.AtomicLong
-  override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-    val m = te.taskMetrics
+final class Ledger extends SparkListener with QueryExecutionListener {
+  private val jobs, tasks, taskCpuNs, taskRunMs, shuffleRead, shuffleWrite, spill,
+    analysisMs, optimizerMs, planningMs = new LongAdder
+  private val stages = new ConcurrentLinkedQueue[String]
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = jobs.increment()
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+    val si = e.stageInfo
+    val m = si.taskMetrics
+    val _ = stages.add(s"""{"id":${si.stageId},"tasks":${si.numTasks},""" +
+      s""""cpu_s":${Bench.r3(m.executorCpuTime / 1e9)},"run_s":${Bench.r3(m.executorRunTime / 1e3)},""" +
+      s""""sh_r_bytes":${m.shuffleReadMetrics.totalBytesRead},""" +
+      s""""sh_w_bytes":${m.shuffleWriteMetrics.bytesWritten},""" +
+      s""""name":${quote(si.name.takeWhile(_ != '\n').take(90))}}""")
+  }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+    val m = e.taskMetrics
     if (m != null) {
-      taskCpuNs.addAndGet(m.executorCpuTime)
-      taskRunMs.addAndGet(m.executorRunTime)
-      nTasks.incrementAndGet()
+      tasks.increment()
+      taskCpuNs.add(m.executorCpuTime)
+      taskRunMs.add(m.executorRunTime)
+      shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
+      shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
+      spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
     }
   }
+
+  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+    val p = qe.tracker.phases
+    def ms(k: String): Long = p.get(k).map(_.durationMs).getOrElse(0L)
+    analysisMs.add(ms("analysis"))
+    optimizerMs.add(ms("optimization"))
+    planningMs.add(ms("planning"))
+  }
+
+  override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+
+  /** Everything delivered since the previous call; resets the ledger. */
+  def take(): Ledger.Counts = Ledger.Counts(
+    jobs.sumThenReset(), tasks.sumThenReset(), taskCpuNs.sumThenReset(),
+    taskRunMs.sumThenReset(), shuffleRead.sumThenReset(), shuffleWrite.sumThenReset(),
+    spill.sumThenReset(), analysisMs.sumThenReset(), optimizerMs.sumThenReset(),
+    planningMs.sumThenReset(),
+    Iterator.continually(stages.poll()).takeWhile(_ != null).toVector)
 }
 
-object Bench {
-  /** Minimal JSON string escape for interpolated values (paths, query
-    * names, exception text): a data dir containing a quote or
-    * backslash must not emit invalid JSON to stdout/bench_full.json.
+object Ledger {
+  /** One row's counts. `stages` holds one JSON object per completed
+    * stage: `{id, tasks, cpu_s, run_s, sh_r_bytes, sh_w_bytes, name}`.
     */
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  final case class Counts(jobs: Long, tasks: Long, taskCpuNs: Long, taskRunMs: Long,
+                          shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
+                          analysisMs: Long, optimizerMs: Long, planningMs: Long,
+                          stages: Seq[String])
+}
+
+/** The one main that times registry rows:
+  * `runMain graft.Bench [name,name2,...] [reps]` (sfDir from
+  * SPARK_GRAFT_SF_DIR, threads from SPARK_GRAFT_CPUS). With no argument
+  * it times every record once, the suite the driver runs. A name filter
+  * narrows the rows and their warm-ups; with `reps` each row runs back
+  * to back and every summary figure reads the last (steady-state) rep.
+  * `--list` prints the registry names without starting Spark;
+  * SPARK_GRAFT_EXPLAIN=1 prints each row's formatted plan after its
+  * last rep. Every rep is one `bench_rows.jsonl` line (its wall split,
+  * [[Ledger]] counts, stage list, codegen counts and [[JvmStats]]
+  * snapshot) and one stderr line `[bench] <name> rep<r> <sec>s jobs=..
+  * stages=.. janino=..`, so a slow row explains itself without a rerun.
+  */
+object Bench {
+  private[graft] def r3(x: Double): Double = math.round(x * 1000) / 1000.0
+
+  /** One timed row. `stats` is its `jvm_stats` entry in
+    * bench_full.json: every field of `json` except the stage list.
+    */
+  final case class Row(name: String, rep: Int, sec: Double, ok: Boolean,
+                       buildMs: Double, execMs: Double, janinoN: Long, janinoMs: Double,
+                       counts: Ledger.Counts, jvm: String) {
+    def taskCpuS: Double = counts.taskCpuNs / 1e9
+    private def fields: String =
+      s""""build_ms":$buildMs,"exec_ms":$execMs,"n_jobs":${counts.jobs},""" +
+        s""""n_stages":${counts.stages.size},"shuffle_read_bytes":${counts.shuffleReadBytes},""" +
+        s""""shuffle_write_bytes":${counts.shuffleWriteBytes},"spill_bytes":${counts.spillBytes},""" +
+        s""""janino_n":$janinoN,"janino_ms":$janinoMs,"analysis_ms":${counts.analysisMs},""" +
+        s""""optimizer_ms":${counts.optimizerMs},"planning_ms":${counts.planningMs}"""
+    def json: String =
+      s"""{"q":${quote(name)},"rep":$rep,"sec":${r3(sec)},"task_cpu_s":${r3(taskCpuS)},""" +
+        s""""ok":$ok,$fields,"stages":${counts.stages.mkString("[", ",", "]")},"jvm":$jvm}"""
+    def stats: String = "{" + fields + "," + jvm.drop(1)
+  }
+
+  private def drain(spark: SparkSession): Unit =
+    try ListenerBridge.drain(spark.sparkContext) catch { case _: Throwable => () }
+
+  /** Times one row: `body` builds the query's DataFrame (`build_ms`:
+    * table opens, analysis, any job the builder runs itself) and a
+    * `noop` write executes it (`exec_ms`). The noop write runs the
+    * DECLARED plan end to end; a bare `.count()` would let the optimizer
+    * delete top-level sorts, so every orderBy query's final sort would
+    * go unmeasured. Work finished before the call is no row's: the bus
+    * is drained and the ledger taken first. Never throws: a crashing row
+    * must be LOUD (stderr, `ok = false`), never a suspiciously fast
+    * success that lowers the suite total.
+    */
+  def measure(spark: SparkSession, ledger: Ledger, name: String, rep: Int)(
+      body: => DataFrame): Row = {
+    drain(spark)
+    val _ = ledger.take()
+    val gc0 = JvmStats.gcTimeMs; val gcN0 = JvmStats.gcCount
+    val jit0 = JvmStats.jitTimeMs; val cpu0 = JvmStats.processCpuNs
+    val jan0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val janNs0 = CodeGenerator.compileTime
+    val (usr0, sys0, minf0, majf0) = JvmStats.procStat
+    val (pc0, pms0, pmf0, pio0, piof0) = JvmStats.psiTotalsUs
+    val up0 = JvmStats.uptimeMs
+    val t0 = System.nanoTime()
+    var built = -1L
+    val ok =
+      try {
+        val df = body
+        built = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] FAILED $name: ${e.getClass.getSimpleName}: " +
+          String.valueOf(e.getMessage).take(200))
+        false
+      }
+    val t1 = System.nanoTime()
+    if (built < 0) built = t1
+    val sec = (t1 - t0) / 1e9
+    val cpuSec = (JvmStats.processCpuNs - cpu0) / 1e9
+    // task-end and execution-end events are posted async — flush first
+    drain(spark)
+    val c = ledger.take()
+    val (usr1, sys1, minf1, majf1) = JvmStats.procStat
+    val (pc1, pms1, pmf1, pio1, piof1) = JvmStats.psiTotalsUs
+    val hz = 100.0 // USER_HZ; fine for a diagnostic ratio
+    // psi deltas in ms; -1 (interface absent) stays -1, not a bogus delta
+    def psiD(a: Long, b: Long): Long = if (a < 0 || b < 0) -1L else (b - a) / 1000
+    val jvm = s"""{"gc_ms":${JvmStats.gcTimeMs - gc0},"gc_n":${JvmStats.gcCount - gcN0},""" +
+      s""""jit_ms":${JvmStats.jitTimeMs - jit0},"cpu_s":${r3(cpuSec)},""" +
+      s""""usr_s":${math.round((usr1 - usr0) / hz * 100) / 100.0},""" +
+      s""""sys_s":${math.round((sys1 - sys0) / hz * 100) / 100.0},""" +
+      s""""minflt":${minf1 - minf0},"majflt":${majf1 - majf0},""" +
+      s""""task_cpu_s":${r3(c.taskCpuNs / 1e9)},""" +
+      s""""task_run_s":${math.round(c.taskRunMs / 10.0) / 100.0},""" +
+      s""""n_tasks":${c.tasks},""" +
+      s""""t0_ms":$up0,"t1_ms":${JvmStats.uptimeMs},""" +
+      s""""load":${math.round(JvmStats.loadAvg * 10) / 10.0},""" +
+      s""""psi_cpu_ms":${psiD(pc0, pc1)},"psi_mem_ms":${psiD(pms0, pms1)},""" +
+      s""""psi_mem_full_ms":${psiD(pmf0, pmf1)},"psi_io_ms":${psiD(pio0, pio1)},""" +
+      s""""psi_io_full_ms":${psiD(piof0, piof1)},""" +
+      s""""cc_mb":${JvmStats.codeCacheUsed / (1 << 20)},""" +
+      s""""heap_mb":${JvmStats.heapUsed / (1 << 20)},""" +
+      s""""heap_comm_mb":${JvmStats.heapCommitted / (1 << 20)}}"""
+    val row = Row(name, rep, sec, ok,
+      buildMs = math.round((built - t0) / 1e5) / 10.0,
+      execMs = math.round((t1 - built) / 1e5) / 10.0,
+      janinoN = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - jan0,
+      janinoMs = math.round((CodeGenerator.compileTime - janNs0) / 1e5) / 10.0,
+      c, jvm)
+    System.err.println(f"[bench] $name rep$rep $sec%.3fs jobs=${c.jobs} " +
+      f"stages=${c.stages.size} janino=${row.janinoN}")
+    row
+  }
 
   def main(args: Array[String]): Unit = {
     // ms from JVM start to main — with -XX:+AlwaysPreTouch this absorbs
     // the whole-heap fault-in, so a host-pressure window shows up HERE
     // (a big t_main_ms) instead of inside some query's wall time
     val tMainMs = JvmStats.uptimeMs
+    if (args.headOption.contains("--list")) { // for sweep scripts; no Spark
+      SparkEntry.registry.map(_.name).sorted.foreach(println)
+      return
+    }
+    val only = args.headOption.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val reps = if (args.length > 1) args(1).toInt else 1
+    require(reps >= 1, s"reps must be >= 1, got $reps")
+    val selected = SparkEntry.registry.filter(q => only.forall(_.contains(q.name)))
+    only.foreach { names =>
+      val unknown = names -- selected.map(_.name)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val taskMetrics = new TaskMetricsListener
+    val ledger = new Ledger
     // one adjacency materialization for the whole graph family (the
     // real-pipeline posture; the first graph query to run pays the
     // build, the rest reuse it). Standalone per-query numbers:
-    // tools/bench_loop.sh / QBench, which leave the conf off.
+    // SPARK_GRAFT_CACHE_EDGES=false, as tools/scalecheck.sh runs.
     def buildSession(): SparkSession = {
-      val s = Sessions.local(Sessions.cacheEdgesEnv(default = true))
-      s.sparkContext.addSparkListener(taskMetrics)
+      val s = Sessions.local(sys.env.get("SPARK_GRAFT_CACHE_EDGES").fold(true)(_.toBoolean))
+      s.sparkContext.addSparkListener(ledger)
+      s.listenerManager.register(ledger)
       s
     }
     var spark = buildSession()
@@ -175,7 +348,7 @@ object Bench {
       if (java.nio.file.Files.isDirectory(sib)) sib.toString else sfDir
     }
     def warmAll(kind: SparkEntry.Warm, dir: String): Unit =
-      for (q <- SparkEntry.registry.filter(_.warm == kind))
+      for (q <- selected.filter(_.warm == kind))
         warm(q.name) {
           q.build(spark, dir).write.format("noop").mode("overwrite").save()
         }
@@ -184,94 +357,33 @@ object Bench {
     graft.queries.GraphQueries.clearEdgeCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-    var failed = List.empty[String]
     val stats = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // Incremental per-query record (r15 lesson: the bench printed its
-    // JSON only at suite end, so a mid-suite JVM death — heartbeat
-    // self-kill, OOM-kill, SIGKILL — left the round with ZERO evidence
-    // for 374 completed-or-not queries). One JSONL line per query,
-    // flushed to disk the moment the query finishes: any death now
-    // leaves a parseable partial record of everything that completed.
-    val rowsPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "target/bench_rows.jsonl"))
-    val rowsWriter: Option[java.io.Writer] =
-      try {
-        if (rowsPath.getParent != null)
-          java.nio.file.Files.createDirectories(rowsPath.getParent)
-        Some(java.nio.file.Files.newBufferedWriter(rowsPath,
-          java.nio.charset.StandardCharsets.UTF_8))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] WARN cannot open $rowsPath: $e"); None
-      }
-    def emitRow(line: String): Unit = rowsWriter.foreach { w =>
-      try { w.write(line); w.write("\n"); w.flush() }
-      catch { case _: Throwable => () }
-    }
-    def runTimed(name: String)(body: => Unit): (String, Double, Double, Boolean) = {
-      val gc0 = JvmStats.gcTimeMs; val gcN0 = JvmStats.gcCount
-      val jit0 = JvmStats.jitTimeMs; val cpu0 = JvmStats.processCpuNs
-      val (usr0, sys0, minf0, majf0) = JvmStats.procStat
-      val (pc0, pms0, pmf0, pio0, piof0) = JvmStats.psiTotalsUs
-      val tcpu0 = taskMetrics.taskCpuNs.get; val trun0 = taskMetrics.taskRunMs.get
-      val nt0 = taskMetrics.nTasks.get
-      val up0 = JvmStats.uptimeMs
-      val t0 = System.nanoTime()
-      var ok = true
-      try body
-      catch { case e: Throwable =>
-        // a crashing query must be LOUD — recorded as a failure, never
-        // as a suspiciously fast success that lowers the suite total
-        ok = false
-        failed ::= name
-        System.err.println(s"[bench] FAILED $name: ${e.getClass.getSimpleName}: " +
-          String.valueOf(e.getMessage).take(200))
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val cpuSec = (JvmStats.processCpuNs - cpu0) / 1e9
-      // task-end events are posted async — flush before snapshotting
-      try { org.apache.spark.graftbridge.ListenerBridge.drain(spark.sparkContext) }
-      catch { case _: Throwable => () }
-      val (usr1, sys1, minf1, majf1) = JvmStats.procStat
-      val (pc1, pms1, pmf1, pio1, piof1) = JvmStats.psiTotalsUs
-      val hz = 100.0 // USER_HZ; fine for a diagnostic ratio
-      val taskCpuSec = (taskMetrics.taskCpuNs.get - tcpu0) / 1e9
-      // psi deltas in ms; -1 (interface absent) stays -1, not a bogus delta
-      def psiD(a: Long, b: Long): Long = if (a < 0 || b < 0) -1L else (b - a) / 1000
-      stats(name) = s"""{"gc_ms":${JvmStats.gcTimeMs - gc0},"gc_n":${JvmStats.gcCount - gcN0},""" +
-        s""""jit_ms":${JvmStats.jitTimeMs - jit0},"cpu_s":${math.round(cpuSec * 1000) / 1000.0},""" +
-        s""""usr_s":${math.round((usr1 - usr0) / hz * 100) / 100.0},""" +
-        s""""sys_s":${math.round((sys1 - sys0) / hz * 100) / 100.0},""" +
-        s""""minflt":${minf1 - minf0},"majflt":${majf1 - majf0},""" +
-        s""""task_cpu_s":${math.round(taskCpuSec * 1000) / 1000.0},""" +
-        s""""task_run_s":${math.round((taskMetrics.taskRunMs.get - trun0) / 10.0) / 100.0},""" +
-        s""""n_tasks":${taskMetrics.nTasks.get - nt0},""" +
-        s""""t0_ms":$up0,"t1_ms":${JvmStats.uptimeMs},""" +
-        s""""load":${math.round(JvmStats.loadAvg * 10) / 10.0},""" +
-        s""""psi_cpu_ms":${psiD(pc0, pc1)},"psi_mem_ms":${psiD(pms0, pms1)},""" +
-        s""""psi_mem_full_ms":${psiD(pmf0, pmf1)},"psi_io_ms":${psiD(pio0, pio1)},""" +
-        s""""psi_io_full_ms":${psiD(piof0, piof1)},""" +
-        s""""cc_mb":${JvmStats.codeCacheUsed / (1 << 20)},""" +
-        s""""heap_mb":${JvmStats.heapUsed / (1 << 20)},""" +
-        s""""heap_comm_mb":${JvmStats.heapCommitted / (1 << 20)}}"""
-      emitRow(s"""{"q":"${esc(name)}","sec":${math.round(sec * 1000) / 1000.0},""" +
-        s""""task_cpu_s":${math.round(taskCpuSec * 1000) / 1000.0},"ok":$ok,""" +
-        s""""jvm":${stats(name)}}""")
-      (name, sec, taskCpuSec, ok)
+    // Incremental per-row record (r15 lesson: the bench printed its
+    // JSON only at suite end, so a mid-suite JVM death left the round
+    // with ZERO evidence for the queries that had completed).
+    val rows = new JsonLines(java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS", "target/bench_rows.jsonl")))
+    def run(name: String, rep: Int)(build: (SparkSession, String) => DataFrame): Row = {
+      val s = ensureLive()
+      val row = measure(s, ledger, name, rep)(build(s, sfDir))
+      rows.emit(row.json)
+      stats(name) = row.stats
+      row
     }
     // the shared-adjacency cache build as its OWN timed row, so the
     // alphabetically-first graph query's wall is plan cost, not
     // plan + family cache build (r11 verdict item 2). Counted in the
-    // suite total (it is real suite work) but not in n_queries.
+    // suite total (it is real suite work) but not in n_queries. The
+    // build is the row's build; its exec writes an empty frame.
     val cacheRows =
-      if (spark.conf.get(graft.queries.GraphQueries.CacheEdgesKey, "false").toBoolean)
-        Seq(runTimed("_graph_cache_build") {
-          graft.queries.GraphQueries.warmEdgeCaches(spark, sfDir)
+      if (spark.conf.get(graft.queries.GraphQueries.CacheEdgesKey, "false").toBoolean &&
+          selected.exists(_.name.startsWith("graph_")))
+        Seq(run("_graph_cache_build", 1) { (s, dir) =>
+          graft.queries.GraphQueries.warmEdgeCaches(s, dir)
+          s.emptyDataFrame
         })
       else Seq.empty
-    // noop-format write: runs the DECLARED plan end to end (a bare
-    // .count() would let the optimizer delete top-level sorts, so
-    // every orderBy query's final sort would go unmeasured).
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
     // heap discipline (r15: end-of-suite heap sat at 13.1-13.6 GB of
     // 16 GB — <=20% headroom before the GC death spiral that fed the
     // heartbeat self-kill). The one deliberately suite-lived allocation
@@ -280,11 +392,14 @@ object Bench {
     // pinned in the block manager until unpersisted — so after the last
     // graph_* query, explicitly unpersist every persistent RDD (at that
     // boundary the edge frames are the only ones) and clear the map.
-    val lastGraph = ordered.lastIndexWhere(_._1.startsWith("graph_"))
+    val ordered = selected.sortBy(_.name)
+    val lastGraph = ordered.lastIndexWhere(_.name.startsWith("graph_"))
     val results = cacheRows ++
-      ordered.zipWithIndex.map { case ((name, fn), i) =>
-        val r = runTimed(name) {
-          fn(ensureLive(), sfDir).write.format("noop").mode("overwrite").save()
+      ordered.zipWithIndex.map { case (q, i) =>
+        val last = (1 to reps).map(run(q.name, _)(q.build)).last
+        if (explain && last.ok) {
+          println(s"==== PLAN ${q.name} ====")
+          q.build(ensureLive(), sfDir).explain("formatted")
         }
         if (i == lastGraph && !spark.sparkContext.isStopped) {
           graft.queries.GraphQueries.clearEdgeCache()
@@ -292,13 +407,12 @@ object Bench {
             .foreach(_.unpersist(blocking = false))
           System.err.println("[bench] graph family done — edge cache released")
         }
-        r
+        last
       }
-    val qs = results.map { case (k, v, _, _) => s"\"" + esc(k) + "\":" + v }
-      .mkString("{", ",", "}")
+    val qs = results.map(r => quote(r.name) + ":" + r.sec).mkString("{", ",", "}")
     // headline total counts only successful queries: a crashing query's
     // (typically fast) elapsed time must not lower the suite total
-    val total = results.collect { case (_, v, _, true) => v }.sum
+    val total = results.filter(_.ok).map(_.sec).sum
     // Stall guard (r14 lesson: one kernel-reclaim window put a 289.7 s
     // graph_triangles — 20.8 s task-CPU, 2.2 s calm — into the round's
     // public artifact). Wall ≫ in-task CPU is the idle-wall fingerprint
@@ -336,27 +450,20 @@ object Bench {
     // dozens of rows and silently double the suite; 12 re-measures
     // bounds that at ~3% of suite wall, keeping the worst offenders
     // (largest wall/ref excess first).
-    val stallSuspects = results.filter { case (name, sec, tcpu, ok) =>
-      ok && !name.startsWith("_") &&
-        ((sec > 5.0 && sec > 5.0 * math.max(tcpu, 0.01)) ||
-          refWalls.get(name).exists(ref => sec > 3.0 * ref && sec > 2.0))
-    }.sortBy { case (name, sec, _, _) =>
-      -(sec / refWalls.getOrElse(name, sec))
-    }.take(12)
-    val remeasured = stallSuspects.map { case (name, sec1, tcpu1, _) =>
-      val (_, sec2, tcpu2, ok2) = runTimed(name + "__remeasure") {
-        SparkEntry.queries(name)(ensureLive(), sfDir)
-          .write.format("noop").mode("overwrite").save()
-      }
-      (name, sec1, tcpu1, sec2, tcpu2, ok2)
+    val stallSuspects = results.filter { r =>
+      r.ok && !r.name.startsWith("_") &&
+        ((r.sec > 5.0 && r.sec > 5.0 * math.max(r.taskCpuS, 0.01)) ||
+          refWalls.get(r.name).exists(ref => r.sec > 3.0 * ref && r.sec > 2.0))
+    }.sortBy(r => -(r.sec / refWalls.getOrElse(r.name, r.sec))).take(12)
+    val remeasured = stallSuspects.map { r =>
+      (r, run(r.name + "__remeasure", 1)(SparkEntry.queries(r.name)))
     }
-    val remeasuredJson = remeasured.map {
-      case (name, s1, t1, s2, t2, ok2) =>
-        s"\"" + esc(name) + "\":{\"wall\":" + math.round(s1 * 100) / 100.0 +
-          ",\"task_cpu_s\":" + math.round(t1 * 100) / 100.0 +
-          ",\"wall2\":" + math.round(s2 * 100) / 100.0 +
-          ",\"task_cpu2_s\":" + math.round(t2 * 100) / 100.0 +
-          ",\"ok2\":" + ok2 + "}"
+    val remeasuredJson = remeasured.map { case (r1, r2) =>
+      quote(r1.name) + ":{\"wall\":" + math.round(r1.sec * 100) / 100.0 +
+        ",\"task_cpu_s\":" + math.round(r1.taskCpuS * 100) / 100.0 +
+        ",\"wall2\":" + math.round(r2.sec * 100) / 100.0 +
+        ",\"task_cpu2_s\":" + math.round(r2.taskCpuS * 100) / 100.0 +
+        ",\"ok2\":" + r2.ok + "}"
     }.mkString("{", ",", "}")
     // DIAGNOSTIC ONLY: the rerun executes with warm page cache and JIT,
     // so wall2 is systematically a little lower even absent a stall —
@@ -367,14 +474,14 @@ object Bench {
     // wall >> task CPU on run 1 and wall ≈ task CPU on run 2; a warm
     // cache merely shaves wall with a similar CPU both runs).
     val totalAdjusted = total - remeasured.collect {
-      case (_, s1, _, s2, _, true) if s2 < s1 => s1 - s2
+      case (r1, r2) if r2.ok && r2.sec < r1.sec => r1.sec - r2.sec
     }.sum
-    // a rerun failure is recorded in its ok2 field; the synthetic
-    // "<name>__remeasure" key must not reach the driver's failed list
-    // (it isn't a registry key, and the query's REAL run succeeded)
-    failed = failed.filterNot(_.endsWith("__remeasure"))
-    val failedJson = failed.sorted.map("\"" + esc(_) + "\"").mkString("[", ",", "]")
-    val statsJson = stats.map { case (k, v) => s"\"${esc(k)}\":$v" }.mkString("{", ",", "}")
+    // a rerun failure is recorded in its ok2 field, not in the failed
+    // list (the synthetic "<name>__remeasure" row isn't a registry key,
+    // and the query's REAL run succeeded)
+    val failed = results.filterNot(_.ok).map(_.name).sorted
+    val failedJson = failed.map(quote).mkString("[", ",", "]")
+    val statsJson = stats.map { case (k, v) => s"${quote(k)}:$v" }.mkString("{", ",", "}")
     // End-of-suite heap guard (r15 item 2): after a full GC the live set
     // must sit well under Xmx — a suite whose RETAINED heap creeps
     // toward the ceiling is one hostile window away from the GC storm
@@ -392,7 +499,7 @@ object Bench {
         s"$endHeapMb MB >= 70% of $maxHeapMb MB Xmx — find the leak before it " +
         "becomes the next heartbeat death")
     val heapJson = s""""end_heap_mb":$endHeapMb,"max_heap_mb":$maxHeapMb,"heap_guard_ok":$heapOk,"session_rebuilds":$rebuilds"""
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","total_stall_adjusted":${math.round(totalAdjusted * 100) / 100.0},"remeasured":$remeasuredJson,"queries":$qs,"failed":$failedJson,"t_main_ms":$tMainMs,$heapJson,"jvm_stats":$statsJson,"sf":"${esc(sfDir)}"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","total_stall_adjusted":${math.round(totalAdjusted * 100) / 100.0},"remeasured":$remeasuredJson,"queries":$qs,"failed":$failedJson,"t_main_ms":$tMainMs,$heapJson,"jvm_stats":$statsJson,"sf":${quote(sfDir)}}"""
     // The driver's stdout capture keeps only the LAST ~2000 chars, so
     // the full per-query line (~75 KB with jvm_stats) can never parse
     // from its tail — every BENCH_r0*.json shipped "parsed": null.
@@ -420,7 +527,7 @@ object Bench {
         java.nio.file.Files.move(tmp, outPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        "\"" + esc(outPath.toString) + "\""
+        quote(outPath.toString)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] WARN could not write $outPath: $e")
         "null"
@@ -428,16 +535,16 @@ object Bench {
     // each slowest entry carries wall AND in-task CPU: a loaded-host
     // window (r4/r5/r10 fingerprint: wall balloons, task CPU flat) is
     // then readable straight off the driver artifact, no rerun needed
-    val slowest = results.filter(_._4).sortBy(-_._2).take(10)
-      .map { case (k, v, tc, _) =>
-        s"\"" + esc(k) + "\":{\"wall\":" + math.round(v * 100) / 100.0 +
-          ",\"task_cpu_s\":" + math.round(tc * 100) / 100.0 + "}"
+    val slowest = results.filter(_.ok).sortBy(-_.sec).take(10)
+      .map { r =>
+        quote(r.name) + ":{\"wall\":" + math.round(r.sec * 100) / 100.0 +
+          ",\"task_cpu_s\":" + math.round(r.taskCpuS * 100) / 100.0 + "}"
       }
       .mkString("{", ",", "}")
     val cacheBuildJson = cacheRows.headOption
-      .map(r => (math.round(r._2 * 100) / 100.0).toString).getOrElse("null")
-    println(s"""{"metric":"total","value":${math.round(total * 100) / 100.0},"unit":"sec","total_stall_adjusted":${math.round(totalAdjusted * 100) / 100.0},"remeasured":$remeasuredJson,"n_queries":${results.size - cacheRows.size},"n_failed":${failed.size},"failed":$failedJson,"cache_build_s":$cacheBuildJson,"slowest":$slowest,"t_main_ms":$tMainMs,$heapJson,"detail":$detailJson,"sf":"${esc(sfDir)}"}""")
-    rowsWriter.foreach(w => try w.close() catch { case _: Throwable => () })
+      .map(r => (math.round(r.sec * 100) / 100.0).toString).getOrElse("null")
+    println(s"""{"metric":"total","value":${math.round(total * 100) / 100.0},"unit":"sec","total_stall_adjusted":${math.round(totalAdjusted * 100) / 100.0},"remeasured":$remeasuredJson,"n_queries":${results.size - cacheRows.size},"n_failed":${failed.size},"failed":$failedJson,"cache_build_s":$cacheBuildJson,"slowest":$slowest,"t_main_ms":$tMainMs,$heapJson,"detail":$detailJson,"sf":${quote(sfDir)}}""")
+    rows.close()
     spark.stop()
   }
 }

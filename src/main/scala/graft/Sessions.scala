@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession posture of the command-line mains (Bench,
-  * Verify, QBench, StageProbe, JitProbe, ScaleGen). Library code never
+  * Verify, ScaleGen). Library code never
   * builds a session; the test suite and the benchmark harness keep
   * their own builders.
   */
@@ -44,8 +44,4 @@ object Sessions {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-
-  /** `SPARK_GRAFT_CACHE_EDGES` when set, else the main's own default. */
-  def cacheEdgesEnv(default: Boolean): Boolean =
-    sys.env.get("SPARK_GRAFT_CACHE_EDGES").fold(default)(_.toBoolean)
 }

@@ -353,7 +353,7 @@ object SparkEntry {
       * code depends on AQE's join choices, which differ across SFs, so
       * sf0.001 classes never transfer (r17 A/B); one same-SF run leaves
       * the timed run compiling zero new classes, walls down 30-45 %
-      * (r18 JitProbe: pagerank 4.1 -> 1.7 s).
+      * (r18 janino counts: pagerank 4.1 -> 1.7 s).
       */
     case object TimedSf extends Warm
   }

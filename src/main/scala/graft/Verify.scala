@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import JsonLines.quote
 /** Driver-run correctness dump: each SparkEntry.registry result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -34,32 +35,11 @@ object Verify {
       spark
     }
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // the compare inputs FIRST — they depend on nothing Spark does
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val rowsWriter =
-      try Some(Files.newBufferedWriter(Paths.get(s"$outDir/verify_rows.jsonl"),
-        java.nio.charset.StandardCharsets.UTF_8))
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] WARN cannot open verify_rows.jsonl: $e"); None
-      }
-    def emitRow(line: String): Unit = rowsWriter.foreach { w =>
-      try { w.write(line); w.write("\n"); w.flush() }
-      catch { case _: Throwable => () }
-    }
+    val rows = new JsonLines(Paths.get(s"$outDir/verify_rows.jsonl"))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -69,13 +49,13 @@ object Verify {
           .parquet(s"$outDir/$name")
         val sec = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[verify] $name ok in $sec%.1fs")
-        emitRow(s"""{"q":${q(name)},"ok":true,"sec":${math.round(sec * 100) / 100.0}}""")
+        rows.emit(s"""{"q":${quote(name)},"ok":true,"sec":${math.round(sec * 100) / 100.0}}""")
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        emitRow(s"""{"q":${q(name)},"ok":false,"err":${q(String.valueOf(e.getMessage).take(300))}}""")
+        rows.emit(s"""{"q":${quote(name)},"ok":false,"err":${quote(String.valueOf(e.getMessage).take(300))}}""")
       }
     }
-    rowsWriter.foreach(w => try w.close() catch { case _: Throwable => () })
+    rows.close()
     spark.stop()
   }
 }

@@ -195,7 +195,7 @@ object GraphQueries {
     * distinct — one exchange — while this fold needs the ok-level
     * distinct plus a count; deriving the 12 unweighted consumers from
     * this fold would charge them that second exchange whenever the
-    * cache is off (QBench / scalecheck standalone runs).
+    * cache is off (standalone `graft.Bench` runs, tools/scalecheck.sh).
     */
   private[graft] def tradePairCounts(s: SparkSession, dir: String): DataFrame =
     sharedEdges(s, dir, "tradew", materializeDefault = false) {

@@ -39,7 +39,11 @@ class ParallelJobsSpec extends SparkSpec {
       assert(e.getSuppressed.nonEmpty, "the cancelled sibling's error is attached")
       ListenerBridge.drain(sc)
       assert(started.size == 1, s"jobs started: $started")
-      val end = ended.toArray(Array.empty[SparkListenerJobEnd]).find(_.jobId == started.peek().intValue)
+      // Spark fails the job's waiter before it posts the job-end event,
+      // so a drain can return before that event is queued: wait for it
+      def end = ended.toArray(Array.empty[SparkListenerJobEnd]).find(_.jobId == started.peek().intValue)
+      val deadline = System.nanoTime() + 10000000000L
+      while (end.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
       assert(end.exists(_.jobResult.isInstanceOf[JobFailed]), s"long job ended as $end")
     } finally {
       sc.clearJobGroup()

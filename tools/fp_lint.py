@@ -221,6 +221,10 @@ def main(path, bless=False):
 
 
 if __name__ == "__main__":
+    if len(sys.argv) < 2:
+        print("usage: fp_lint.py [--bless] <oracle_sql.json> | --selftest",
+              file=sys.stderr)
+        sys.exit(2)
     if len(sys.argv) == 2 and sys.argv[1] == "--selftest":
         selftest()
     else:

@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Regenerate BENCH_r{NN}_table.md from a driver-identical bench JSON
-(in-suite) and a qbench_all.sh sweep file (standalone rep2).
+(in-suite) and a qbench_all.sh sweep file (standalone rep2: a fresh
+`graft.Bench <name> 2` per query).
 Usage: make_bench_table.py <round> <bench_json> <rep2_txt> > BENCH_r{NN}_table.md
 (e.g. `make_bench_table.py 7 /tmp/bench.json /tmp/rep2.txt`).
 Round-agnostic successor of make_r5/r6_table.py (which also carried a
@@ -31,7 +32,7 @@ def main(round_label, bench_json, rep2_txt):
           f"(+ the _-prefixed shared cache-build row), "
           f"failed={d['failed']}, "
           f"t_main_ms={d['t_main_ms']} (JVM+pretouch+session+warmup, "
-          f"outside query timings). rep2: `graft.QBench <name> 2` in a "
+          f"outside query timings). rep2: `graft.Bench <name> 2` in a "
           f"fresh JVM per query (steady state). Ratio = in-suite / rep2. "
           f"Earlier rounds and the r4 band's root-cause evidence: "
           f"BENCHNOTES.md.")

@@ -1,6 +1,9 @@
 #!/bin/bash
-# Standalone steady-state sweep: fresh JVM per query, 2 reps, record rep2.
-# Produces a "name rep2_sec" table on stdout (rep1 lines go to the log).
+# Standalone steady-state sweep: fresh JVM per query, `graft.Bench <name> 2`
+# without the shared graph-edge cache, record rep2 from Bench's per-row
+# stderr line "[bench] <name> rep<r> <sec>s ...". Produces a
+# "name rep2_sec" table on stdout (rep2_sec is FAILED when a rep failed;
+# the [bench] lines go to stderr).
 # Usage: tools/qbench_all.sh <sf_dir> [names...]; default = all queries.
 set -u
 SF=${1:?sf_dir}; shift
@@ -15,14 +18,15 @@ OPENS="$OPENS --add-opens java.base/sun.nio.cs=ALL-UNNAMED"
 OPENS="$OPENS --add-opens java.base/sun.security.action=ALL-UNNAMED"
 OPENS="$OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 if [ $# -gt 0 ]; then NAMES="$*"; else
-  NAMES=$(SPARK_GRAFT_QUERY_LIST=1 java $OPENS -cp "$CP" graft.QBench --list)
+  NAMES=$(java $OPENS -cp "$CP" graft.Bench --list)
 fi
 for n in $NAMES; do
-  out=$(SPARK_GRAFT_SF_DIR="$SF" java $OPENS \
+  out=$(SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CACHE_EDGES=false java $OPENS \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Duser.timezone=UTC \
     -Xmx16g -Xms16g -XX:+AlwaysPreTouch -XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing \
-    -cp "$CP" graft.QBench "$n" 2 2>/dev/null | grep '\[qbench\]')
+    -cp "$CP" graft.Bench "$n" 2 2>&1 >/dev/null | grep '^\[bench\] ')
   echo "$out" >&2
-  rep2=$(echo "$out" | grep rep2 | awk '{print $4}' | tr -d 's')
+  rep2=$(echo "$out" | awk -v n="$n" '$2 == "FAILED" {f = 1} $2 == n && $3 == "rep2" {s = $4}
+    END {print f ? "FAILED" : substr(s, 1, length(s) - 1)}')
   echo "$n $rep2"
 done
