@@ -422,39 +422,16 @@ object Bench {
     // plan regression. The threshold is deliberately coarse (>5 s AND
     // >5× task CPU): driver-side-recursion queries have low task CPU
     // but sub-5 s walls, so a calm run re-measures nothing.
-    // Cross-run trigger (r17 verdict item 6): the idle-wall fingerprint
-    // is blind to CPU-CONTENTION stalls, where task CPU inflates along
-    // with wall (r17's driver window read graph_khop_reach at 32.06 s
-    // wall / 34.3 s task CPU — 13x its own same-round 8-core reading —
-    // and remeasured stayed empty). A committed per-query reference of
-    // the previous round's calm walls (bench_ref.json, override via
-    // SPARK_GRAFT_BENCH_REF, empty/absent ⇒ trigger off) marks any row
-    // at > 3x its reference wall AND > 2 s absolute for one re-measure.
-    // Both observations are reported, the headline total stays the raw
-    // first run — identical semantics to the idle-wall re-measure.
-    val refWalls: Map[String, Double] = {
-      val p = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "bench_ref.json"))
-      if (!java.nio.file.Files.isReadable(p)) Map.empty
-      else try {
-        val txt = new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
-        "\"([^\"\\\\]+)\"\\s*:\\s*([0-9.]+)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] WARN unreadable bench ref $p: $e")
-        Map.empty
-      }
-    }
-    // cap: a globally loaded window could trip the ref trigger on
-    // dozens of rows and silently double the suite; 12 re-measures
-    // bounds that at ~3% of suite wall, keeping the worst offenders
-    // (largest wall/ref excess first).
+    // A CPU-contention stall inflates task CPU along with wall, so this
+    // trigger cannot see it; each row reads it off its own jvm record
+    // instead (`psi_cpu_ms`, the host's CPU-pressure stall time over the
+    // row, and `load`), with no reference from another run. Cap: a
+    // globally stalled window re-measures at most the 12 slowest
+    // suspects (~3% of suite wall).
     val stallSuspects = results.filter { r =>
       r.ok && !r.name.startsWith("_") &&
-        ((r.sec > 5.0 && r.sec > 5.0 * math.max(r.taskCpuS, 0.01)) ||
-          refWalls.get(r.name).exists(ref => r.sec > 3.0 * ref && r.sec > 2.0))
-    }.sortBy(r => -(r.sec / refWalls.getOrElse(r.name, r.sec))).take(12)
+        r.sec > 5.0 && r.sec > 5.0 * math.max(r.taskCpuS, 0.01)
+    }.sortBy(-_.sec).take(12)
     val remeasured = stallSuspects.map { r =>
       (r, run(r.name + "__remeasure", 1)(SparkEntry.queries(r.name)))
     }
@@ -502,7 +479,7 @@ object Bench {
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","total_stall_adjusted":${math.round(totalAdjusted * 100) / 100.0},"remeasured":$remeasuredJson,"queries":$qs,"failed":$failedJson,"t_main_ms":$tMainMs,$heapJson,"jvm_stats":$statsJson,"sf":${quote(sfDir)}}"""
     // The driver's stdout capture keeps only the LAST ~2000 chars, so
     // the full per-query line (~75 KB with jvm_stats) can never parse
-    // from its tail — every BENCH_r0*.json shipped "parsed": null.
+    // from its tail — early bench records all shipped "parsed": null.
     // Contract, three legs:
     //   1. full line first on stdout (legacy contract, line-parsers);
     //   2. full JSON atomically at target/bench_full.json (the durable

@@ -88,13 +88,14 @@ object DolarIngest {
     sum(when(!col("valid") && !col("file_corrupt") && col("pair").isNotNull, 1L)
       .otherwise(0L))
 
-  /** Run the batch load from `rawDir`, appending valid rows via `write`.
-    * Enforces H1 (corrupt file fails the whole batch before any write)
-    * and H3 (zero-valid files not counted), and returns the D2 counters.
+  /** Load one raw batch (`readRaw`'s columns: file, value), appending
+    * valid rows via `write`. Enforces H1 (corrupt file fails the whole
+    * batch before any write) and H3 (zero-valid files not counted), and
+    * returns the D2 counters. Batch loads and every stream micro-batch
+    * go through here.
     */
-  private def load(spark: SparkSession, rawDir: String)
-                  (write: DataFrame => Unit): LoadReport = {
-    val rows = parse(readRaw(spark, rawDir)).cache()
+  private def load(raw: DataFrame)(write: DataFrame => Unit): LoadReport = {
+    val rows = parse(raw).cache()
     try {
       // per-file counters: #groups == #files — metadata-sized, so the
       // driver-side collect here is the report, not a data collect.
@@ -140,14 +141,12 @@ object DolarIngest {
   def batchToTable(spark: SparkSession, rawDir: String,
                    table: String = "dolar"): LoadReport = {
     val _ = spark.sql(Schemas.dolarDdl.replace("dolar", table))
-    load(spark, rawDir)(_.write.mode("append").saveAsTable(table))
+    load(readRaw(spark, rawDir))(_.write.mode("append").saveAsTable(table))
   }
 
-  /** Path-based append (same semantics, no catalog) — used by the
-    * self-contained e2e demo query and the streaming sink.
-    */
+  /** Path-based append (same semantics, no catalog). */
   def batchToPath(spark: SparkSession, rawDir: String, dest: String): LoadReport =
-    load(spark, rawDir)(_.write.mode("append").parquet(dest))
+    load(readRaw(spark, rawDir))(_.write.mode("append").parquet(dest))
 
   /** A7 JDBC parity leg: the same parse/validate batch appended through
     * Spark's JDBC sink, mirroring the reference's INSERT path into a
@@ -160,7 +159,7 @@ object DolarIngest {
     */
   def batchToJdbc(spark: SparkSession, rawDir: String, url: String,
                   table: String = "dolar"): LoadReport =
-    load(spark, rawDir)(_.write.mode("append")
+    load(readRaw(spark, rawDir))(_.write.mode("append")
       .format("jdbc").option("url", url).option("dbtable", table).save())
 
   /** Date-partitioned append — the engine's analogue of the index the
@@ -172,7 +171,7 @@ object DolarIngest {
     */
   def batchToPartitionedPath(spark: SparkSession, rawDir: String,
                              dest: String): LoadReport =
-    load(spark, rawDir) { df =>
+    load(readRaw(spark, rawDir)) { df =>
       df.withColumn("p_date", to_date(col("fechahora")))
         .write.mode("append").partitionBy("p_date").parquet(dest)
     }
@@ -200,14 +199,7 @@ object DolarIngest {
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = parse(batch).cache()
-        try {
-          val corrupt = rows.filter(col("file_corrupt"))
-            .select(col("file")).distinct().collect().map(_.getString(0))
-          if (corrupt.nonEmpty) throw new CorruptFileException(corrupt.toSeq.sorted)
-          val valid = rows.filter(col("valid")).select(col("fechahora"), col("valor"))
-          if (!valid.isEmpty) valid.write.mode("append").parquet(dest)
-        } finally { val _ = rows.unpersist() }
+        val _ = load(batch)(_.write.mode("append").parquet(dest))
       }
       .start()
   }

@@ -18,10 +18,14 @@ class StreamingSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft_stream_spec")
     val raw = tmp.resolve("raw").toString
     RawZone.write(raw, 1L, """[["1757509256000","3920.00"],["1757509266000","3921.50"]]""")
-    RawZone.write(raw, 2L, """[["1757509276000","3922.25"]]""")
+    // one unconvertible value beside a good row (dropped and counted)
+    RawZone.write(raw, 2L, """[["1757509276000","3922.25"],["1757509296000","abc"]]""")
+    // a file whose rows are all bad inserts nothing (H3)
+    RawZone.write(raw, 4L, """[["x"],["1757509306000","n/a"]]""")
 
     val batchDest = tmp.resolve("batch").toString
-    DolarIngest.batchToPath(spark, raw, batchDest)
+    val report = DolarIngest.batchToPath(spark, raw, batchDest)
+    assert(report.filesProcessed == 2 && report.totalRowsInserted == 3)
 
     val streamDest = tmp.resolve("stream").toString
     val ckpt = tmp.resolve("ckpt").toString
@@ -41,6 +45,22 @@ class StreamingSpec extends SparkSpec {
     RawZone.write(raw, 3L, """[["1757509286000","3923.00"]]""")
     DolarIngest.stream(spark, raw, streamDest, ckpt).awaitTermination()
     assert(spark.read.parquet(streamDest).count() == 4)
+  }
+
+  test("H1: a corrupt raw file fails the stream before anything is written") {
+    val tmp = Files.createTempDirectory("graft_stream_corrupt")
+    val raw = tmp.resolve("raw").toString
+    val dest = tmp.resolve("dolar")
+    RawZone.write(raw, 1L, """[["1757509256000","3920.00"]]""")
+    RawZone.write(raw, 2L, """{"not": "an array"}""")
+    val e = intercept[Exception] {
+      DolarIngest.stream(spark, raw, dest.toString, tmp.resolve("ckpt").toString)
+        .awaitTermination()
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(_.isInstanceOf[DolarIngest.CorruptFileException]),
+      s"no CorruptFileException in the cause chain: ${chain.map(_.getClass.getName)}")
+    assert(!Files.exists(dest), "the failed batch wrote to dest")
   }
 
   test("G2: ProcessingTime trigger drains two files as two live microbatches") {

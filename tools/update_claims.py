@@ -1,27 +1,22 @@
 #!/usr/bin/env python3
 """Regenerate the README's generated State block from run artifacts, so
-test/suite/query counts can never drift from the tree again (they did in
-r5 and r6 when hand-typed).
+test/suite/query counts can never drift from the tree.
 
 Usage:
-  update_claims.py <round> <sbt_test_log> <compare_oracle_log> [bench_table_md] [bench_json]
+  update_claims.py <sbt_test_log> <compare_oracle_log> [bench_json]
 
 Parses:
   - "Tests: succeeded N" / "Suites: completed M" from the sbt -batch test log
   - "== K ok / 0 bad ==" and the "rows-only" line count from a
     tools/compare_oracle.py log
+  - CORRECTNESS.json, the driver-written gate result: it supplies the
+    driver-checked oracle numbers and is cited as their source; the
+    local compare log then only covers queries added since. A missing,
+    empty or unparseable CORRECTNESS.json is an error, never a fallback.
 Rewrites the block between the STATE:BEGIN / STATE:END markers in
 README.md, and prints the canonical one-line claim for BENCHNOTES
 sections to copy verbatim.
-
-The oracle claim is mechanically tied to the STRONGEST artifact
-available (the r7 lesson — the local gate passed a query the driver
-failed): when a driver-written CORRECTNESS_r*.json exists, the newest
-one supplies the driver-checked numbers and is cited as the source; the
-local compare log then only covers queries added SINCE that artifact.
-The DuckDB version the local gate ran under is recorded either way.
 """
-import glob
 import json
 import os
 import re
@@ -45,36 +40,20 @@ def registry_size():
     return len(keys)
 
 
-def newest_driver_artifact():
-    """(path, round_no) of the newest NON-EMPTY CORRECTNESS_r*.json, or
-    None. Empty artifacts are skipped: r15's arrived as `{}` (the bench
-    JVM died before the driver saw any rows), and citing it as "the
-    strongest evidence" would generate a 0/0 driver claim that reads as
-    zero coverage when the actual strongest driver evidence is the
-    previous round's."""
-    best = None
-    for p in glob.glob("CORRECTNESS_r*.json"):
-        m = re.match(r"CORRECTNESS_r(\d+)\.json$", os.path.basename(p))
-        if not m:
-            continue
-        try:
-            if not json.load(open(p)):
-                # empty ({}) is an adjudicated state (r15); say so anyway
-                print(f"WARN: skipping EMPTY driver artifact {p}",
-                      file=sys.stderr)
-                continue
-        except Exception as e:
-            # an UNPARSEABLE newest artifact must not silently demote the
-            # driver-evidence claim to an older round (r16 ADVICE)
-            print(f"WARN: skipping UNPARSEABLE driver artifact {p}: {e}",
-                  file=sys.stderr)
-            continue
-        if best is None or int(m.group(1)) > best[1]:
-            best = (p, int(m.group(1)))
-    return best
+def driver_gate(path="CORRECTNESS.json"):
+    """The driver's gate result as a non-empty dict; exits otherwise. A
+    `{}` is what a gate run that died before any row leaves, and citing
+    it would read as zero coverage."""
+    try:
+        drv = json.load(open(path))
+    except (OSError, ValueError) as e:
+        sys.exit(f"{path}: unreadable driver gate result: {e}")
+    if not isinstance(drv, dict) or not drv:
+        sys.exit(f"{path}: not a non-empty JSON object")
+    return drv
 
 
-def main(round_label, sbt_log, cmp_log, bench_table=None, bench_json=None):
+def main(sbt_log, cmp_log, bench_json=None):
     sbt = open(sbt_log).read()
     cmp_txt = open(cmp_log).read()
     tests = re.search(r"Tests: succeeded (\d+), failed (\d+)", sbt)
@@ -112,46 +91,38 @@ def main(round_label, sbt_log, cmp_log, bench_table=None, bench_json=None):
                 f"{ops.group(1) if ops else '?'} queries, tree has "
                 f"{tree_total} — rerun tools/gen_operators.py")
 
-    # driver artifact, when present, is the stronger evidence: report its
+    # the driver's gate result is the stronger evidence: report its
     # numbers for the queries it covers, local-gate numbers for the rest
-    art = newest_driver_artifact()
-    if art:
-        path, rnd = art
-        drv = json.load(open(path))
-        drv_ok = sum(1 for v in drv.values() if v.get("hash_match") is True)
-        drv_bad = sum(1 for v in drv.values() if v.get("hash_match") is False
-                      or v.get("err") not in (None, "no_oracle"))
-        oracle_claim = (
-            f"**{drv_ok}/{drv_ok + drv_bad} oracle-checked hash-match "
-            f"DuckDB (driver-checked, `{os.path.basename(path)}`)**")
-        if drv_bad:
-            red = [k for k, v in drv.items() if v.get("hash_match") is False
-                   or v.get("err") not in (None, "no_oracle")]
-            local_ok = set(re.findall(r"^(\S+): OK \(", cmp_txt, re.M))
-            fixed = sorted(set(red) & local_ok)
-            oracle_claim += f" — {drv_bad} RED driver-side"
-            if fixed:
-                oracle_claim += (f" ({', '.join(fixed)} since respelled; "
-                                 f"green in the local gate, pending next "
-                                 f"driver run)")
-        # queries not yet in the driver artifact carry local evidence only
-        new_q = total - len(drv)
-        if new_q > 0:
-            oracle_claim += (f"; +{new_q} newer queries local-gate only "
-                             f"({n_ok}/{n_ok + n_bad} local{duck_note})")
-        else:
-            oracle_claim += (f"; local gate {n_ok}/{n_ok + n_bad}{duck_note}")
+    drv = driver_gate()
+    drv_ok = sum(1 for v in drv.values() if v.get("hash_match") is True)
+    drv_bad = sum(1 for v in drv.values() if v.get("hash_match") is False
+                  or v.get("err") not in (None, "no_oracle"))
+    oracle_claim = (
+        f"**{drv_ok}/{drv_ok + drv_bad} oracle-checked hash-match "
+        f"DuckDB (driver-checked, `CORRECTNESS.json`)**")
+    if drv_bad:
+        red = [k for k, v in drv.items() if v.get("hash_match") is False
+               or v.get("err") not in (None, "no_oracle")]
+        local_ok = set(re.findall(r"^(\S+): OK \(", cmp_txt, re.M))
+        fixed = sorted(set(red) & local_ok)
+        oracle_claim += f" — {drv_bad} RED driver-side"
+        if fixed:
+            oracle_claim += (f" ({', '.join(fixed)} since respelled; "
+                             f"green in the local gate, pending next "
+                             f"driver run)")
+    # queries not yet in the driver's result carry local evidence only
+    new_q = total - len(drv)
+    if new_q > 0:
+        oracle_claim += (f"; +{new_q} newer queries local-gate only "
+                         f"({n_ok}/{n_ok + n_bad} local{duck_note})")
     else:
-        oracle_claim = (f"**{n_ok}/{n_ok + n_bad} oracle-checked hash-match "
-                        f"DuckDB (LOCAL GATE ONLY{duck_note})**")
+        oracle_claim += f"; local gate {n_ok}/{n_ok + n_bad}{duck_note}"
 
     status = "all green" if n_failed == n_aborted == n_bad == 0 else (
         f"{n_failed} test / {n_bad} oracle FAILURES")
-    # repo-relative: an absolute /root/... path is machine-local noise
-    table_ref = (f" Latest per-query bench table: "
-                 f"`{os.path.relpath(bench_table)}`.") if bench_table else ""
     # bench total is generated from the artifact, never hand-typed (the
     # r11 "~2 min" prose drifted to 3.5 min as the registry grew)
+    bench_line = ""
     if bench_json:
         b = json.load(open(bench_json))
         # "_"-prefixed rows (the shared cache-build) are suite work but
@@ -160,16 +131,16 @@ def main(round_label, sbt_log, cmp_log, bench_table=None, bench_json=None):
         # this very line drew a verdict item)
         nq = b.get("n_queries") or sum(
             1 for k in (b.get("queries") or {}) if not k.startswith("_"))
-        table_ref += (f" Driver-identical bench"
-                      f" (`{os.path.basename(bench_json)}`):"
-                      f" {b['value']:.1f} s / {nq} queries at sf0.1.")
+        bench_line = (f" Driver-identical bench"
+                     f" (`{os.path.basename(bench_json)}`):"
+                     f" {b['value']:.1f} s / {nq} queries at sf0.1.")
     block = (
         f"<!-- STATE:BEGIN generated by tools/update_claims.py - do not hand-edit -->\n"
-        f"**State (round {round_label}):** {total} registered queries, "
+        f"**State:** {total} registered queries, "
         f"{oracle_claim} "
         f"({rows_only} rows-only entries, each pinned by a dedicated spec); "
         f"{n_tests} ScalaTest tests across {n_suites} suites, {status}."
-        f"{table_ref}\n"
+        f"{bench_line}\n"
         f"<!-- STATE:END -->")
     readme = open("README.md").read()
     pat = re.compile(r"<!-- STATE:BEGIN.*?<!-- STATE:END -->", re.S)
@@ -182,4 +153,6 @@ def main(round_label, sbt_log, cmp_log, bench_table=None, bench_json=None):
 
 
 if __name__ == "__main__":
+    if not 2 <= len(sys.argv) - 1 <= 3:
+        sys.exit(__doc__)
     main(*sys.argv[1:])
