@@ -27,17 +27,24 @@ import org.apache.spark.sql.SparkSession
   *
   * Serving reads go through [[IntervalQuery.serve]] — the same
   * second-truncated inclusive-interval query the engine runs everywhere
-  * else, as a prepared plan with bound parameters; responses are
-  * interval-bounded, exactly like the reference returns the full
-  * fetched list.
+  * else — which answers from a driver-side snapshot of the table, kept
+  * in step with the table's files; responses are interval-bounded,
+  * exactly like the reference returns the full fetched list. A dropped
+  * or missing table fails the request with the 500 above, never with
+  * rows served before the drop.
   *
   * Thread model: the server's dispatcher thread accepts connections and
   * hands each exchange to a fixed pool of `availableProcessors()`
-  * handler threads, so requests run their Spark jobs concurrently on
-  * the shared session instead of queueing behind one another; further
-  * requests wait in the pool's queue. Handler threads are daemons and
-  * idle ones time out, so a stopped server leaves no thread that keeps
-  * the JVM alive.
+  * handler threads; further requests wait in the pool's queue. A request
+  * reads the catalog, lists the table's files and slices the snapshot,
+  * with no Spark job. It runs a Spark job only when the table's files
+  * changed since the last request (one handler rebuilds the snapshot,
+  * requests for the same table wait for it), or when `serve` falls back
+  * to its prepared plan: a view or partitioned table, more than 2^20
+  * rows, or a null valor (logged once per file listing). Accepted
+  * sockets have TCP_NODELAY set (see `start`). Handler threads are
+  * daemons and idle ones time out, so a stopped server leaves no thread
+  * that keeps the JVM alive.
   */
 object DolarApi {
 
@@ -50,6 +57,11 @@ object DolarApi {
     */
   def start(spark: SparkSession, port: Int = 0,
             table: String = "dolar"): HttpServer = {
+    // The JDK server writes a response's headers and body as two
+    // segments; under Nagle's algorithm the body waits for the client's
+    // delayed ACK of the headers, ~40 ms a request. It reads this
+    // property once, when the JVM's first server is created.
+    val _ = System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.setExecutor(handlerPool())
 

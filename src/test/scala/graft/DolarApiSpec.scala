@@ -18,7 +18,8 @@ import graft.serve.DolarApi
   * interval query, asserting status codes, the exact Spanish 400 detail,
   * the 422 validation status, the 500 DB-error mapping, and the
   * count/data response shape with golden values — also under
-  * concurrent clients, and with no thread left behind by `stop`.
+  * concurrent clients, after the served table is dropped, and with no
+  * thread left behind by `stop`.
   */
 class DolarApiSpec extends SparkSpec {
 
@@ -128,6 +129,26 @@ class DolarApiSpec extends SparkSpec {
       gate.countDown()
       clients.foreach(_.join())
       assert(failures.isEmpty, failures.asScala.mkString("\n"))
+    } finally {
+      server.stop(0)
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
+  }
+
+  test("a table dropped under a running server answers 500, not its previous rows") {
+    val table = "dolar_api_dropped"
+    val points = loadGrid(table)
+    val server = DolarApi.start(spark, 0, table)
+    val port = server.getAddress.getPort
+    val body = s"""{"start":"${iso(points.head._1)}","end":"${iso(points.last._1)}"}"""
+    try {
+      val before = post(port, body)
+      assert(before.statusCode() == 200)
+      assert(before.body().startsWith(s"""{"count":${points.size},"""))
+      spark.sql(s"DROP TABLE $table")
+      val after = post(port, body)
+      assert(after.statusCode() == 500, after.body())
+      assert(after.body().startsWith("""{"detail":"Error consultando la base de datos:"""))
     } finally {
       server.stop(0)
       spark.sql(s"DROP TABLE IF EXISTS $table")
