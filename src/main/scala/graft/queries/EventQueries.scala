@@ -22,7 +22,7 @@ object EventQueries {
   private def ev(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
 
-  import Exact.{dec, dsum}
+  import Exact.dsum
 
   // --- the reference interval query, on events -------------------------------
   /** Reference query semantics on test data (SURVEY §2 B1/B2/C1/F1/F2):
@@ -71,7 +71,7 @@ object EventQueries {
       .rowsBetween(-2, Window.currentRow)
     ev(s, dir)
       .select(col("user_id"), col("event_id"),
-        (sum(dec(col("value"))).over(w).cast("double") /
+        (dsum(col("value")).over(w) /
           count(lit(1)).over(w)).as("moving_avg"))
       .orderBy(col("user_id"), col("event_id"))
   }
@@ -2159,7 +2159,7 @@ object EventQueries {
     ev(s, dir)
       .select(col("user_id"), col("event_id"),
         count(lit(1)).over(w).as("n_last_hour"),
-        sum(dec(col("value"))).over(w).cast("double").as("value_last_hour"))
+        dsum(col("value")).over(w).as("value_last_hour"))
       .orderBy(col("user_id"), col("event_id"))
   }
 

@@ -1,13 +1,15 @@
 package graft
 
 import graft.queries.Relational
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.types.DecimalType
 
 /** Plan-shape assertions for the relational surface (value correctness
   * is covered by the driver's DuckDB oracle): filter/projection pushdown
   * to the parquet scan, broadcast joins on dimension sides, and
   * partial (map-side) aggregation.
   */
-class RelationalSpec extends SparkSpec {
+class RelationalSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("scan_filter_project pushes filter and prunes columns at the scan") {
     val df = Relational.scanFilterProject(spark, sf)
@@ -50,6 +52,21 @@ class RelationalSpec extends SparkSpec {
     val plan = planOf(Relational.q1PricingSummary(spark, sf))
     // Spark plans partial_ aggregate functions below the shuffle
     assert(plan.contains("partial_"), s"no partial aggregation in:\n$plan")
+  }
+
+  test("q1's exact sums keep no DECIMAL(28,6) buffer and run in a codegen stage") {
+    val df = Relational.q1PricingSummary(spark, sf)
+    df.collect() // materialize so the adaptive plan is final
+    val exec = df.queryExecution.executedPlan
+    // Spark's own sum over DECIMAL(18,6) would carry a decimal(28,6)
+    // `sum` buffer column out of the partial aggregate
+    val wide = collect(exec) { case p => p.output }.flatten
+      .filter(_.dataType == DecimalType(28, 6))
+    assert(wide.isEmpty, s"decimal(28,6) columns ${wide.mkString(", ")} in:\n$exec")
+    assert(!exec.toString.contains("decimal(28,6)"), s"decimal(28,6) in:\n$exec")
+    assert(exec.toString.linesIterator.exists(l =>
+        l.contains("*(") && l.contains("HashAggregate") && l.contains("partial_exact_sum")),
+      s"the partial exact sums are not in a whole-stage codegen stage:\n$exec")
   }
 
   test("whole-stage codegen covers the scan+filter+project hot path") {
