@@ -38,10 +38,11 @@ object Graft {
     else df.localCheckpoint()
 
   /** [[materialize]] that survives AS A PARTITIONED relation: the frame
-    * is hash-repartitioned on `keys` into `nParts` (explicit n — AQE
-    * cannot re-coalesce a user-numbered repartition), checkpointed, and
-    * the resulting relation re-declares `HashPartitioning(keys, nParts)`
-    * via [[org.apache.spark.sql.graftbridge.PartitioningBridge]].
+    * is hash-repartitioned on `keys` into the session's
+    * `spark.sql.shuffle.partitions` (explicit n — AQE cannot re-coalesce
+    * a user-numbered repartition), checkpointed, and the resulting
+    * relation re-declares `HashPartitioning(keys, n)` via
+    * [[org.apache.spark.sql.graftbridge.PartitioningBridge]].
     * Needed because under AQE `localCheckpoint()` records
     * `UnknownPartitioning` even when the physical layout is a fresh
     * hash exchange, so every downstream join keyed on `keys` would
@@ -51,21 +52,26 @@ object Graft {
     * this declaration). The declared partitioning is made true by
     * construction here — never call the bridge on a frame whose rows
     * were not laid out by exactly this repartition.
+    *
+    * The count is the session's on purpose, one for every site. A
+    * data-derived count was built and A/B-measured and LOST on the 10×
+    * corpus at local[32] (OPTIMIZATION_r18.md §3: graph_sssp 6.67 s at
+    * 32 parts vs 10.46 s derived, graph_adamic_adar_partitioned 21.53
+    * vs 24.48 s): a declared count ≠ the session count forces
+    * EnsureRequirements to re-exchange the OTHER side of every iterate
+    * join, and raising the session count too only adds task-wave
+    * overhead once nothing spills. On a fixed-core host, partitions =
+    * cores wins; on a real cluster you size the SESSION conf to the
+    * fleet and this follows it. PlanAuditSpec pins the graph rows'
+    * exchange counts that a different count would move.
     */
-  def materializeHashed(df: DataFrame, nParts: Int,
-                        keys: Seq[String]): DataFrame = {
+  def materializeHashed(df: DataFrame, keys: String*): DataFrame = {
+    val nParts =
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val ck = materialize(df.repartition(nParts, keys.map(col): _*))
     org.apache.spark.sql.graftbridge.PartitioningBridge
       .declareHashPartitioning(ck, keys, nParts)
   }
-
-  /** [[materializeHashed]] with the session's shuffle-partition count —
-    * the scale-adaptive default every caller should use.
-    */
-  def materializeHashed(df: DataFrame, keys: String*): DataFrame =
-    materializeHashed(df,
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt,
-      keys)
 
   /** Run independent Spark jobs from one driver thread each, so each
     * job's straggler tail back-fills with the next job's tasks instead
@@ -167,42 +173,72 @@ object Graft {
       sortCols: _*)
 
   def rankedByRange(df: DataFrame, nParts: Int, sortCols: Column*): DataFrame = {
-    // the id is assigned in the projection ABOVE the local sort, so the
-    // per-partition counter increments in sorted iteration order; the
-    // checkpoint pins the assignment before anything else reads it
-    val parted = materialize(
-      df.repartitionByRange(nParts, sortCols: _*)
-        .sortWithinPartitions(sortCols: _*)
-        .withColumn("graft_mid", monotonically_increasing_id()))
-    val withPid = parted
-      .withColumn("graft_pid", shiftright(col("graft_mid"), 33).cast("int"))
-      .withColumn("graft_local",
-        col("graft_mid").bitwiseAND(lit((1L << 33) - 1)) + lit(1L))
-    val counts = withPid.groupBy(col("graft_pid"))
-      .agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    // fail FAST on the documented capacity bound instead of silently
-    // corrupting ranks: a partition at >= 2^33 rows bleeds its ordinal
-    // into the pid bits (overflow rows decode as pid+1), so the
-    // per-decoded-pid counts are the loud signal — free, already here
-    require(counts.forall(_._2 < (1L << 33)),
-      s"rankedByRange: a range partition holds >= 2^33 rows " +
-        s"(counts ${counts.filter(_._2 >= (1L << 33)).mkString(",")}); " +
-        "raise nParts")
-    if (counts.isEmpty)
+    // the 1-based local rank is the id's low 33 bits
+    val local = col("graft_mid").bitwiseAND(lit((1L << 33) - 1)) + lit(1L)
+    val (parted, withPid, offsets) =
+      rangeBlocks(df, nParts, sortCols, Seq("graft_local" -> local), Nil)
+    if (offsets.isEmpty)
       return parted.drop("graft_mid").withColumn("i", lit(0L))
-    // cumulative offsets over the pid-ascending counts; groupBy skips
-    // empty partitions, which is fine — no row carries their pid
-    val offsets = counts.scanLeft((0, 0L)) { case ((_, acc), (pid, c)) =>
-      (pid, acc + c)
-    }.init.zip(counts).map { case ((_, off), (pid, _)) => (pid, off) }
     val offDf = df.sparkSession.createDataFrame(
-      offsets.toSeq.map { case (pid, off) => (pid, off) })
+      offsets.map { case (pid, off) => (pid, off.head) })
       .toDF("graft_pid", "graft_off")
     withPid
       .join(broadcast(offDf), Seq("graft_pid"))
       .withColumn("i", col("graft_local") + col("graft_off"))
       .drop("graft_pid", "graft_local", "graft_off", "graft_mid")
+  }
+
+  /** The steps [[rankedByRange]] and [[cumSumByRange]] share (its
+    * steps 1–3): range partition, local sort, the id `graft_mid` tagged
+    * above the sort and pinned by the checkpoint, the decoded
+    * `graft_pid` (then the `extra` columns), and one driver aggregate
+    * per pid of the row count and of each `sums` input (paired with the
+    * caller's name for it). Returns the checkpointed frame, the tagged
+    * frame and, per non-empty pid ascending, the EXCLUSIVE running
+    * totals of the count and of every sum over the pids before it.
+    */
+  private def rangeBlocks(df: DataFrame, nParts: Int, sortCols: Seq[Column],
+                          extra: Seq[(String, Column)],
+                          sums: Seq[(String, String)])
+      : (DataFrame, DataFrame, Seq[(Int, Seq[Long])]) = {
+    val parted = materialize(
+      df.repartitionByRange(nParts, sortCols: _*)
+        .sortWithinPartitions(sortCols: _*)
+        .withColumn("graft_mid", monotonically_increasing_id()))
+    val withPid = extra.foldLeft(parted
+      .withColumn("graft_pid", shiftright(col("graft_mid"), 33).cast("int"))) {
+      case (d, (nm, c)) => d.withColumn(nm, c)
+    }
+    val rows = withPid.groupBy(col("graft_pid"))
+      .agg(count(lit(1)).as("graft_c"),
+        sums.map { case (in, _) => sum(col(in)).as(in) }: _*)
+      .collect()
+    // fail FAST on the documented capacity bound instead of silently
+    // corrupting the offsets: a partition at >= 2^33 rows bleeds its
+    // ordinal into the pid bits (overflow rows decode as pid+1), so the
+    // per-decoded-pid counts are the loud signal — free, already here
+    val over = rows.filter(_.getLong(1) >= (1L << 33))
+    require(over.isEmpty,
+      s"a range partition holds >= 2^33 rows (pid -> rows: " +
+        s"${over.map(r => s"${r.getInt(0)} -> ${r.getLong(1)}").mkString(", ")}); " +
+        "raise the range partition count (spark.sql.shuffle.partitions " +
+        "unless nParts is given)")
+    // LongType caller contract, enforced loudly: a NULL in any sum
+    // input nulls that partition's total and the getLong below would
+    // throw an opaque NPE — name the offending column instead
+    for (r <- rows; ix <- sums.indices if r.isNullAt(2 + ix))
+      throw new IllegalArgumentException(
+        s"cumSumByRange: sum input '${sums(ix)._2}' is NULL somewhere in " +
+          s"range partition ${r.getInt(0)} — coalesce NULLs to 0L (or " +
+          "filter them) before calling; prefix sums over NULL are " +
+          "undefined under this helper's LongType contract")
+    val totals = rows.toSeq
+      .map(r => r.getInt(0) -> (0 to sums.size).map(ix => r.getLong(1 + ix)))
+      .sortBy(_._1)
+    val offsets = totals.scanLeft(Seq.fill(sums.size + 1)(0L)) {
+      case (acc, (_, ts)) => acc.zip(ts).map { case (a, t) => a + t }
+    }
+    (parted, withPid, totals.map(_._1).zip(offsets))
   }
 
   /** Exact NTILE(`k`) bucket from a global 1-based rank — the SQL
@@ -260,45 +296,15 @@ object Graft {
     val pre = sums.zip(inNames).foldLeft(df) {
       case (d, ((c, _), nm)) => d.withColumn(nm, c)
     }
-    val parted = materialize(
-      pre.repartitionByRange(nParts, sortCols: _*)
-        .sortWithinPartitions(sortCols: _*)
-        .withColumn("graft_mid", monotonically_increasing_id()))
-    val withPid = parted
-      .withColumn("graft_pid", shiftright(col("graft_mid"), 33).cast("int"))
-    val totalRows = withPid.groupBy(col("graft_pid"))
-      .agg(count(lit(1)).as("graft_c"),
-        inNames.map(nm => sum(col(nm)).as(nm)): _*)
-      .collect()
-    // same fail-fast capacity guard as rankedByRange: an overflowed
-    // partition's ordinal bleeds into the pid bits and the offsets
-    // below would be silently wrong
-    require(totalRows.forall(_.getLong(1) < (1L << 33)),
-      "cumSumByRange: a range partition holds >= 2^33 rows; raise " +
-        "spark.sql.shuffle.partitions")
-    // LongType caller contract, enforced loudly: a NULL in any sum
-    // input nulls that partition's total and the getLong below would
-    // throw an opaque NPE — name the offending column instead
-    for (r <- totalRows; ix <- inNames.indices if r.isNullAt(2 + ix))
-      throw new IllegalArgumentException(
-        s"cumSumByRange: sum input '${sums(ix)._2}' is NULL somewhere in " +
-          s"range partition ${r.getInt(0)} — coalesce NULLs to 0L (or " +
-          "filter them) before calling; prefix sums over NULL are " +
-          "undefined under this helper's LongType contract")
-    val totals = totalRows
-      .map(r => r.getInt(0) -> inNames.indices.map(ix => r.getLong(2 + ix)))
-      .sortBy(_._1)
-    if (totals.isEmpty)
+    val (parted, withPid, offsets) =
+      rangeBlocks(pre, nParts, sortCols, Nil, inNames.zip(sums.map(_._2)))
+    if (offsets.isEmpty)
       return sums.foldLeft(parted.drop("graft_mid")) {
         case (d, (_, nm)) => d.withColumn(nm, lit(0L))
       }.drop(inNames: _*)
-    val offsets = totals.scanLeft(
-      (0, inNames.indices.map(_ => 0L): Seq[Long])) {
-      case ((_, acc), (pid, ts)) => (pid, acc.zip(ts).map { case (a, t) => a + t })
-    }.init.zip(totals).map { case ((_, off), (pid, _)) => (pid, off) }
     val offDf = df.sparkSession.createDataFrame(
-      df.sparkSession.sparkContext.parallelize(offsets.toSeq.map {
-        case (pid, off) => org.apache.spark.sql.Row.fromSeq(pid +: off)
+      df.sparkSession.sparkContext.parallelize(offsets.map {
+        case (pid, off) => org.apache.spark.sql.Row.fromSeq(pid +: off.tail)
       }, 1),
       org.apache.spark.sql.types.StructType(
         org.apache.spark.sql.types.StructField("graft_pid",

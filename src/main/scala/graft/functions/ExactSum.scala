@@ -6,7 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, DeclarativeAggregate}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -22,9 +22,11 @@ import org.apache.spark.sql.types._
   * Per row ([[ExactMicros]]): the unscaled long of the DECIMAL(18,6)
   * cast, by the exact step of [[ExactSumKernel.fastMicros]] where its
   * bound holds, else by Spark's own `Cast`. The eval mode (ANSI raises
-  * on cast overflow, legacy makes the row null) is read from
-  * `SQLConf.get` when the aggregate is built, i.e. from the session
-  * active then.
+  * on cast overflow, legacy makes the row null) is a parameter here.
+  * `ExactSum(column)` leaves it open ([[ExactSumCall]]) and the
+  * optimizer fills it in from the conf of the session that runs the
+  * query, as it does for the `sum(cast(...))` spelling this replaces.
+  * The session active when the column was built does not matter.
   *
   * Buffer: the 128-bit sum (hi, lo) in two longs, updated and merged by
   * wrapping adds with an unsigned-compare carry, plus a non-empty flag.
@@ -36,9 +38,7 @@ import org.apache.spark.sql.types._
   * under ANSI and is null under legacy. Spark checks that range on each
   * partial buffer as well; here only the exact total is checked.
   */
-case class ExactSum(
-    child: Expression,
-    evalMode: EvalMode.Value = EvalMode.fromSQLConf(SQLConf.get))
+case class ExactSum(child: Expression, evalMode: EvalMode.Value)
   extends DeclarativeAggregate with UnaryLike[Expression] {
 
   import ExactSum._
@@ -110,7 +110,25 @@ object ExactSum {
   }
 
   def apply(c: Column): Column =
-    ColumnBridge.toColumn(ExactSum(ColumnBridge.toExpression(c)).toAggregateExpression())
+    ColumnBridge.toColumn(ExactSumCall(ColumnBridge.toExpression(c)).toAggregateExpression())
+}
+
+/** What `ExactSum(column)` builds: an [[ExactSum]] whose eval mode is
+  * still open. Analysis types it, and the optimizer's
+  * `ReplaceExpressions` swaps in `ExactSum(child, mode)`, both under
+  * the session that runs the query, so the mode is that session's
+  * `spark.sql.ansi.enabled`. Same name and children as the aggregate,
+  * so an unaliased column keeps its `exact_sum(x)` name.
+  */
+case class ExactSumCall(child: Expression)
+  extends AggregateFunction with RuntimeReplaceableAggregate with UnaryLike[Expression] {
+
+  override def replacement: Expression = ExactSum(child, EvalMode.fromSQLConf(SQLConf.get))
+  override def checkInputDataTypes(): TypeCheckResult = replacement.checkInputDataTypes()
+  override def prettyName: String = "exact_sum"
+
+  override protected def withNewChildInternal(newChild: Expression): ExactSumCall =
+    copy(child = newChild)
 }
 
 /** The kernels the generated code calls (a plain object, so Java sees

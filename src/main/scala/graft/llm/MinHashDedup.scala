@@ -33,6 +33,13 @@ object MinHashDedup {
   val Bands = 16
   val RowsPerBand: Int = NumPerms / Bands
 
+  /** Default per-(band, bucket) head cap of [[nearDupPairs]] and its
+    * audits: Spark's `spark.sql.optimizer.windowGroupLimitThreshold`
+    * default, the largest cap that still plans as a map-side
+    * `WindowGroupLimit`.
+    */
+  val MaxBucket = 1000
+
   /** Distinct 3-gram word shingles of a words column, hashed straight to
     * sorted 64-bit longs — the codegen'd
     * [[graft.functions.HashedShingles3]] expression (`xxhash64(w1, w2,
@@ -104,9 +111,9 @@ object MinHashDedup {
     * |bucket|²; a capped pile still chains into one dup cluster
     * because every doc pairs with the pile's lowest-id heads across
     * 16 independent bands (recall on genuinely distinct near-dups is
-    * untouched — real buckets are far below the cap). Configurable
-    * via `spark.graft.lsh.maxBucket`; the default 1000 sits AT
-    * Spark's `spark.sql.optimizer.windowGroupLimitThreshold` (also
+    * untouched — real buckets are far below the cap). Set per call
+    * by the `maxBucket` parameter; the default [[MaxBucket]] (1000)
+    * sits AT Spark's `spark.sql.optimizer.windowGroupLimitThreshold` (also
     * 1000) — one notch higher and `InsertWindowGroupLimit` stops
     * firing, the rank filter runs only AFTER the full hot bucket has
     * shuffled, and the map-side bound silently disappears
@@ -127,13 +134,8 @@ object MinHashDedup {
     * (`dedup_lsh_bucket_audit`), the never-empty top-20 census whose
     * equivalent check is `dropped_docs = 0` on every row.
     */
-  def nearDupPairs(s: SparkSession, dir: String,
-                   minJaccard: Double = 0.2): DataFrame =
-    nearDupPairs(s, dir, minJaccard,
-      s.conf.get("spark.graft.lsh.maxBucket", "1000").toInt)
-
-  def nearDupPairs(s: SparkSession, dir: String, minJaccard: Double,
-                   maxBucket: Int): DataFrame = {
+  def nearDupPairs(s: SparkSession, dir: String, minJaccard: Double = 0.2,
+                   maxBucket: Int = MaxBucket): DataFrame = {
     // the map-side plan contract, enforced LOUDLY: InsertWindowGroupLimit
     // fires only while maxBucket <= windowGroupLimitThreshold (and the
     // threshold isn't -1 = rule disabled). One notch over and the cap
@@ -143,7 +145,7 @@ object MinHashDedup {
     val wglThreshold = s.conf
       .get("spark.sql.optimizer.windowGroupLimitThreshold", "1000").toInt
     require(wglThreshold >= 0 && maxBucket <= wglThreshold,
-      s"nearDupPairs: spark.graft.lsh.maxBucket=$maxBucket exceeds " +
+      s"nearDupPairs: maxBucket=$maxBucket exceeds " +
         s"spark.sql.optimizer.windowGroupLimitThreshold=$wglThreshold — " +
         "the map-side WindowGroupLimit cap would silently become a " +
         "post-shuffle filter; lower the cap or raise the threshold")
@@ -231,12 +233,8 @@ object MinHashDedup {
     * aggregation of the banded exploding scan — the same exchange
     * keys as the candidate join, with map-side partial counts.
     */
-  def bucketOverflowAudit(s: SparkSession, dir: String): DataFrame =
-    bucketOverflowAudit(s, dir,
-      s.conf.get("spark.graft.lsh.maxBucket", "1000").toInt)
-
   def bucketOverflowAudit(s: SparkSession, dir: String,
-                          maxBucket: Int): DataFrame =
+                          maxBucket: Int = MaxBucket): DataFrame =
     bucketSizes(s, dir, maxBucket)
       .filter(col("bucket_size") > maxBucket)
       .orderBy(col("bucket_size").desc, col("band"), col("bucket"))
@@ -249,12 +247,8 @@ object MinHashDedup {
     * the top. Distributed top-k (TakeOrderedAndProject), never a
     * global sort.
     */
-  def bucketCensus(s: SparkSession, dir: String, k: Int = 20): DataFrame =
-    bucketCensus(s, dir, k,
-      s.conf.get("spark.graft.lsh.maxBucket", "1000").toInt)
-
-  def bucketCensus(s: SparkSession, dir: String, k: Int,
-                   maxBucket: Int): DataFrame =
+  def bucketCensus(s: SparkSession, dir: String, k: Int = 20,
+                   maxBucket: Int = MaxBucket): DataFrame =
     bucketSizes(s, dir, maxBucket)
       .orderBy(col("bucket_size").desc, col("band"), col("bucket"))
       .limit(k)
@@ -274,12 +268,8 @@ object MinHashDedup {
     * Scale: the banded explode is the candidate join's own exchange
     * (map-side partial counts); the audit folds it to 16 rows.
     */
-  def bucketConservationAudit(s: SparkSession, dir: String): DataFrame =
-    bucketConservationAudit(s, dir,
-      s.conf.get("spark.graft.lsh.maxBucket", "1000").toInt)
-
   def bucketConservationAudit(s: SparkSession, dir: String,
-                              maxBucket: Int): DataFrame =
+                              maxBucket: Int = MaxBucket): DataFrame =
     bucketSizes(s, dir, maxBucket)
       .groupBy(col("band"))
       .agg(sum(col("bucket_size")).as("n_memberships"),

@@ -153,10 +153,6 @@ object GraphQueries {
   def pagerank(s: SparkSession, dir: String): DataFrame =
     rankedAll(s, dir).orderBy(col("pr").desc, col("node")).limit(20)
 
-  /** Full rank vector after three iterations (one row per node) —
-    * pagerank's unlimited form, used by AnalyticsOpsSpec's
-    * mass-conservation invariant.
-    */
   /** Symmetrized distinct customer–supplier trade edges (src, dst) —
     * the ONE edge-table definition shared by pagerank and
     * [[khopReach]]. Node ids are LONGS: customer c<k> rides as 2k,
@@ -213,30 +209,14 @@ object GraphQueries {
           (col("sk") * 2L + 1L).as("dst"), col("n_ord"))
     }
 
-  /** ONE family-wide partition count for every graph-side materialized
-    * layout: the session `spark.sql.shuffle.partitions`. A data-derived
-    * count was built and A/B-measured (r18) and LOST on the 10× corpus
-    * at local[32] (graph_sssp 6.67 s at 32 parts vs 10.46 s derived,
-    * graph_adamic_adar_partitioned 21.53 vs 24.48 s): a declared count ≠
-    * the session count forces EnsureRequirements to re-exchange the
-    * OTHER side of every iterate join, and raising the session count
-    * too only adds task-wave overhead once nothing spills. On a
-    * fixed-core host, partitions = cores wins; on a real cluster you
-    * size the SESSION conf to the fleet and this follows it. Every
-    * [[Graft.materializeHashed]] site in this family must use this one
-    * count.
+  /** The family's adjacency-consumption discipline in one place: a
+    * node-keyed table joins broadcast when `broadcastAdj` (the default
+    * of every builder that takes it), SHUFFLE_HASH otherwise (see
+    * [[triangleCount]]'s and [[linkJaccard]]'s scale notes) — so a
+    * change to the gating applies to every builder in lockstep.
     */
-  private[graft] def graphParts(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-  /** [[Graft.materializeHashed]] with the family count when the caller
-    * resolved one (nParts > 0), else the session default — for the
-    * edge-scoped helpers whose unit tests call them without a
-    * (session, dir) pair.
-    */
-  private def matHashed(df: DataFrame, nParts: Int, keys: String*): DataFrame =
-    if (nParts > 0) Graft.materializeHashed(df, nParts, keys)
-    else Graft.materializeHashed(df, keys: _*)
+  private def adjSide(broadcastAdj: Boolean): DataFrame => DataFrame =
+    if (broadcastAdj) broadcast else _.hint("shuffle_hash")
 
   /** Decode a [[tradeEdges]] long node id back to the public
     * "c<custkey>" / "s<suppkey>" string — applied at output boundaries
@@ -247,6 +227,10 @@ object GraphQueries {
     when(c % 2L === 0L, concat(lit("c"), shiftright(c, 1).cast("string")))
       .otherwise(concat(lit("s"), shiftright(c - 1L, 1).cast("string")))
 
+  /** Full rank vector after three iterations (one row per node) —
+    * pagerank's unlimited form, used by AnalyticsOpsSpec's
+    * mass-conservation invariant.
+    */
   def rankedAll(s: SparkSession, dir: String): DataFrame = {
     val edges = tradeEdges(s, dir)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
@@ -264,8 +248,7 @@ object GraphQueries {
     // checkpoint dir) and Graft.materialize switches every such site
     // to reliable `.checkpoint()` when iterations are many or
     // executors preemptible.
-    val adj = Graft.materializeHashed(edges.join(deg, "src"),
-      graphParts(s), Seq("src"))
+    val adj = Graft.materializeHashed(edges.join(deg, "src"), "src")
 
     // initial ranks FROM THE CHECKPOINT (deriving them from `deg`
     // would silently recompute the whole scan→join→distinct edge
@@ -312,17 +295,12 @@ object GraphQueries {
         col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
       .groupBy(col("a.pk").as("part_a"), col("b.pk").as("part_b"))
       .agg(count(lit(1)).as("n_together"))
-    // the part-frequency table grows with the catalog — same gate as
-    // basketRules: broadcastAdj=false swaps the freq joins to shuffled
-    // hash joins keyed on the part id. nOrders stays a 1-row broadcast.
-    val side: DataFrame => DataFrame =
-      if (s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean)
-        broadcast
-      else _.hint("shuffle_hash")
+    // the part-frequency table is part-sized (2e5·SF rows): broadcast,
+    // like nOrders' 1-row total
     pairs
-      .join(side(freq.withColumnRenamed("pk", "part_a")
+      .join(broadcast(freq.withColumnRenamed("pk", "part_a")
         .withColumnRenamed("n_part", "n_a")), "part_a")
-      .join(side(freq.withColumnRenamed("pk", "part_b")
+      .join(broadcast(freq.withColumnRenamed("pk", "part_b")
         .withColumnRenamed("n_part", "n_b")), "part_b")
       .crossJoin(broadcast(nOrders))
       .select(col("part_a"), col("part_b"), col("n_together"),
@@ -369,16 +347,10 @@ object GraphQueries {
     */
   def basketRules(s: SparkSession, dir: String,
                   minSupport: Long = 3): DataFrame = {
-    // the part-frequency table grows with the catalog (2e5·SF rows) —
-    // broadcast-sized at test SFs, data-sized at 100 TB. Same gate as
-    // the triangle family: broadcastAdj=false swaps each freq join to
-    // a shuffled hash join keyed on the part id, so no part-keyed
-    // table has to fit on one executor. nOrders stays a 1-row
-    // broadcast (a scalar, scale-invariant).
-    val side: DataFrame => DataFrame =
-      if (s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean)
-        broadcast
-      else _.hint("shuffle_hash")
+    // the part-frequency table grows with the catalog (2e5·SF rows):
+    // broadcast here like nOrders' 1-row total. A catalog past the
+    // broadcast threshold would need these joins SHUFFLE_HASH-hinted,
+    // as the triangle family's `broadcastAdj = false` spelling does.
     val items = Tables.load(s, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct()
@@ -395,9 +367,9 @@ object GraphQueries {
       .unionByName(undirected.select(col("y").as("part_a"),
         col("x").as("part_b"), col("n_together")))
     directed
-      .join(side(freq.withColumnRenamed("pk", "part_a")
+      .join(broadcast(freq.withColumnRenamed("pk", "part_a")
         .withColumnRenamed("n_part", "n_a")), "part_a")
-      .join(side(freq.withColumnRenamed("pk", "part_b")
+      .join(broadcast(freq.withColumnRenamed("pk", "part_b")
         .withColumnRenamed("n_part", "n_b")), "part_b")
       .crossJoin(broadcast(nOrders))
       .select(col("part_a"), col("part_b"), col("n_together"),
@@ -492,16 +464,14 @@ object GraphQueries {
     val teleportU = 15L * restartU / 100L             // 49999
     val edges = tradeEdges(s, dir)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
-    val adj = Graft.materializeHashed(edges.join(deg, "src"),
-      graphParts(s), Seq("src"))
+    val adj = Graft.materializeHashed(edges.join(deg, "src"), "src")
     // node list is consumed once per iteration (the left join that
     // re-adds teleport mass) — materialize so the distinct doesn't
     // re-run over the adjacency four times; hash-declared on node so
     // the per-iteration left join reuses the layout instead of
     // re-exchanging the vector every round
     val nodes = Graft.materializeHashed(
-      adj.select(col("src").as("node")).distinct(),
-      graphParts(s), Seq("node"))
+      adj.select(col("src").as("node")).distinct(), "node")
     val isSeed = col("node").isin(seeds: _*)
     var ranks = nodes.select(col("node"),
       when(isSeed, lit(restartU)).otherwise(lit(0L)).as("pr_u"))
@@ -584,8 +554,7 @@ object GraphQueries {
     * wire — measured 15.5 s → sub-second at sf0.1.
     *
     * On a graph whose adjacency outgrows a broadcast (billions of
-    * nodes), `broadcastAdj = false` (or session conf
-    * `spark.graft.triangles.broadcastAdj=false`) runs the SAME two
+    * nodes), `broadcastAdj = false` runs the SAME two
     * joins hash-partitioned — SHUFFLE_HASH-hinted, keyed on src/dst —
     * so no node-keyed table ever has to fit on one executor; the
     * degree joins drop their broadcast hints too (deg is node-sized
@@ -603,9 +572,9 @@ object GraphQueries {
     * naive id-ordered SQL and must agree exactly. Output: one row
     * (n_nodes, n_edges, n_triangles) — integer counts, hash-exact.
     */
-  def triangleCount(s: SparkSession, dir: String): DataFrame =
-    triangleCount(s, dir,
-      s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean)
+  def triangleCount(s: SparkSession, dir: String,
+                    broadcastAdj: Boolean = true): DataFrame =
+    triangleCountOn(copurchaseEdges(s, dir), broadcastAdj)
 
   /** Canonical (u < v) distinct co-purchase edge set, materialized —
     * shared by [[triangleCount]] and [[clusteringCoeff]] so neither
@@ -667,16 +636,10 @@ object GraphQueries {
         () => { val _ = bipartiteEdges(s, dir); () }))
     }
 
-  def triangleCount(s: SparkSession, dir: String,
-                    broadcastAdj: Boolean): DataFrame =
-    triangleCountOn(copurchaseEdges(s, dir), broadcastAdj,
-      graphParts(s))
-
   /** Degree-oriented sorted-intersect triangle core over a prebuilt
     * canonical edge set (see [[triangleCount]] for the plan notes).
     */
-  private def triangleCountOn(edges: DataFrame, broadcastAdj: Boolean,
-                              nParts: Int = -1): DataFrame = {
+  private def triangleCountOn(edges: DataFrame, broadcastAdj: Boolean): DataFrame = {
     val deg = edges.select(col("u").as("n"))
       .unionAll(edges.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
@@ -686,8 +649,7 @@ object GraphQueries {
     // re-exchange the edge list twice). In partitioned mode the same
     // joins run as shuffled hash joins building on the (smaller) deg
     // side.
-    val side: DataFrame => DataFrame =
-      if (broadcastAdj) broadcast else _.hint("shuffle_hash")
+    val side = adjSide(broadcastAdj)
     val oriented = edges
       .join(side(deg.as("du")), col("u") === col("du.n"))
       .join(side(deg.as("dv")), col("v") === col("dv.n"))
@@ -708,7 +670,7 @@ object GraphQueries {
     // it once per broadcast, driver-side; re-checkpointing would only
     // add a copy.)
     val outAdj = if (broadcastAdj) outAdj0
-      else matHashed(outAdj0, nParts, "src")
+      else Graft.materializeHashed(outAdj0, "src")
     val perEdge = oriented
       .join(side(outAdj.select(col("src").as("au"), col("nbrs").as("nu"))),
         col("src") === col("au"))
@@ -746,8 +708,7 @@ object GraphQueries {
     */
   def khopReach(s: SparkSession, dir: String,
                 hops: Int = 3, seedMax: Long = 10): DataFrame = {
-    val np = graphParts(s)
-    val edges = Graft.materializeHashed(tradeEdges(s, dir), np, Seq("src"))
+    val edges = Graft.materializeHashed(tradeEdges(s, dir), "src")
     val seeds = Tables.load(s, dir, "customer")
       .filter(col("c_custkey") <= seedMax)
       .select(col("c_custkey").as("root"),
@@ -761,7 +722,7 @@ object GraphQueries {
           .select(col("root"), edges("dst").as("node"))
           .distinct()
           .join(visited, Seq("root", "node"), "left_anti")
-          .withColumn("hop", lit(h)), np, Seq("root", "node"))
+          .withColumn("hop", lit(h)), "root", "node")
       visited = visited.unionByName(next)
       frontier = next
     }
@@ -960,11 +921,10 @@ object GraphQueries {
       col("src"),
       col("dst"),
       expr("1000000L div n_ord").as("w"))
-    val np = graphParts(s)
     val edges = Graft.materializeHashed(
       half.unionByName(
         half.select(col("dst").as("src"), col("src").as("dst"), col("w"))),
-      np, Seq("src"))
+      "src")
     var dist = Tables.load(s, dir, "customer")
       .filter(col("c_custkey") <= seedMax)
       .select(col("c_custkey").as("root"),
@@ -977,7 +937,7 @@ object GraphQueries {
       dist = Graft.materializeHashed(
         dist.unionByName(relaxed)
           .groupBy(col("root"), col("node"))
-          .agg(min(col("dist")).as("dist")), np, Seq("root", "node"))
+          .agg(min(col("dist")).as("dist")), "root", "node")
     }
     dist.filter(col("dist") > 0)
       .groupBy(col("root"))
@@ -1035,8 +995,7 @@ object GraphQueries {
     */
   def labelPropagation(s: SparkSession, dir: String,
                        rounds: Int = 3): DataFrame = {
-    val np = graphParts(s)
-    val edges = Graft.materializeHashed(tradeEdges(s, dir), np, Seq("src"))
+    val edges = Graft.materializeHashed(tradeEdges(s, dir), "src")
     // node ids are longs; the LABEL stays the public "c…"/"s…" STRING
     // so the min-label tie-break keeps its original string ordering
     var labels = edges.select(col("src").as("node")).distinct()
@@ -1051,7 +1010,7 @@ object GraphQueries {
           .agg(count(lit(1)).as("cnt"))
           .withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1)
-          .select(col("node"), col("lab")), np, Seq("node"))
+          .select(col("node"), col("lab")), "node")
     }
     labels.groupBy(col("lab").as("community"))
       .agg(count(lit(1)).as("n_nodes"))
@@ -1252,9 +1211,7 @@ object GraphQueries {
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val wedges = deg.agg(
       sum(expr("deg * (deg - 1) div 2")).as("n_wedges"))
-    val tri = triangleCountOn(edges,
-      s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean,
-      graphParts(s))
+    val tri = triangleCountOn(edges, broadcastAdj = true)
       .select(col("n_triangles"))
     tri.crossJoin(broadcast(wedges))
       .select(col("n_triangles"), col("n_wedges"),
@@ -1302,7 +1259,7 @@ object GraphQueries {
     * Scale posture mirrors [[triangleCount]]: the node-keyed adjacency
     * grows with the part catalog (2e5·SF nodes, hot-hub neighbor
     * lists), so it is data-sized at 100 TB, not broadcast-sized.
-    * `spark.graft.triangles.broadcastAdj=false` runs the SAME two
+    * `broadcastAdj = false` runs the SAME two
     * joins SHUFFLE_HASH-hinted on u/v — the adjacency is materialized
     * once and exchanged per join (edge-volume, never pair-volume) and
     * no node-keyed table ever has to fit on one executor. Both
@@ -1311,13 +1268,9 @@ object GraphQueries {
     * PlanAuditSpec pins the partitioned plan to zero
     * BroadcastHashJoin over the adjacency.
     */
-  def linkJaccard(s: SparkSession, dir: String, k: Int = 20): DataFrame =
-    linkJaccard(s, dir, k,
-      s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean)
-
-  def linkJaccard(s: SparkSession, dir: String, k: Int,
-                  broadcastAdj: Boolean): DataFrame =
-    commonCounts(copurchaseEdges(s, dir), broadcastAdj, graphParts(s))
+  def linkJaccard(s: SparkSession, dir: String, k: Int = 20,
+                  broadcastAdj: Boolean = true): DataFrame =
+    commonCounts(copurchaseEdges(s, dir), broadcastAdj)
       .select(col("u"), col("v"), col("common"),
         (col("common").cast("double")
           / (col("du") + col("dv") - col("common")).cast("double"))
@@ -1325,28 +1278,19 @@ object GraphQueries {
       .orderBy(col("jaccard").desc, col("u"), col("v"))
       .limit(k)
 
-  /** Shared core of [[linkJaccard]] and [[commonNeighbors]]: per-edge
-    * (u, v, du, dv, common) over the canonical edge set, with the
-    * neighbor intersection the codegen'd sorted two-pointer merge and
-    * the adjacency consumed broadcast or shuffle-hash per the caller's
-    * `broadcastAdj` (see [[linkJaccard]]'s scale notes).
-    */
   /** Symmetrized both-directions edge list of a canonical (u < v) set
     * — the link-predictor family's shared first step.
     */
   private def symmetrize(edges: DataFrame): DataFrame =
     edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
 
-  /** The family's adjacency-consumption discipline in one place: a
-    * node-keyed table joins broadcast when declared broadcastable,
-    * SHUFFLE_HASH otherwise (see [[linkJaccard]]'s scale notes) — so a
-    * change to the gating applies to every predictor in lockstep.
+  /** Shared core of [[linkJaccard]] and [[commonNeighbors]]: per-edge
+    * (u, v, du, dv, common) over the canonical edge set, with the
+    * neighbor intersection the codegen'd sorted two-pointer merge and
+    * the adjacency consumed broadcast or shuffle-hash per the caller's
+    * `broadcastAdj` (see [[linkJaccard]]'s scale notes).
     */
-  private def adjSide(broadcastAdj: Boolean): DataFrame => DataFrame =
-    if (broadcastAdj) broadcast else _.hint("shuffle_hash")
-
-  private def commonCounts(edges: DataFrame, broadcastAdj: Boolean,
-                           nParts: Int = -1): DataFrame = {
+  private def commonCounts(edges: DataFrame, broadcastAdj: Boolean): DataFrame = {
     val full = symmetrize(edges)
     val adj0 = full.groupBy(col("u").as("node"))
       .agg(sort_array(collect_list(col("v"))).as("nbrs"),
@@ -1355,7 +1299,7 @@ object GraphQueries {
     // materialize once, hash-partitioned on node so neither join
     // re-exchanges it (broadcast mode computes it once driver-side)
     val adj = if (broadcastAdj) adj0
-      else matHashed(adj0, nParts, "node")
+      else Graft.materializeHashed(adj0, "node")
     val side = adjSide(broadcastAdj)
     edges
       .join(side(adj.select(col("node").as("nu"), col("nbrs").as("au"),
@@ -1376,13 +1320,9 @@ object GraphQueries {
     * break on (u, v). Same plan and `broadcastAdj` gating as
     * [[linkJaccard]]; the oracle spells the wedge join.
     */
-  def commonNeighbors(s: SparkSession, dir: String, k: Int = 20): DataFrame =
-    commonNeighbors(s, dir, k,
-      s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean)
-
-  def commonNeighbors(s: SparkSession, dir: String, k: Int,
-                      broadcastAdj: Boolean): DataFrame =
-    commonCounts(copurchaseEdges(s, dir), broadcastAdj, graphParts(s))
+  def commonNeighbors(s: SparkSession, dir: String, k: Int = 20,
+                      broadcastAdj: Boolean = true): DataFrame =
+    commonCounts(copurchaseEdges(s, dir), broadcastAdj)
       .filter(col("common") > 0)
       .select(col("u"), col("v"), col("common"), col("du"), col("dv"))
       .orderBy(col("common").desc, col("u"), col("v"))
@@ -1400,16 +1340,12 @@ object GraphQueries {
     *
     * Plan: degree is one aggregation of the symmetrized edge list;
     * scoring joins the NODE-sized degree table onto the edges twice —
-    * broadcast or shuffle-hash per `spark.graft.triangles.broadcastAdj`,
+    * broadcast or shuffle-hash per `broadcastAdj`,
     * the family discipline — and the top-20 is a distributed
     * TakeOrdered. No adjacency lists are ever built.
     */
-  def prefAttachment(s: SparkSession, dir: String, k: Int = 20): DataFrame =
-    prefAttachment(s, dir, k,
-      s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean)
-
-  def prefAttachment(s: SparkSession, dir: String, k: Int,
-                     broadcastAdj: Boolean): DataFrame = {
+  def prefAttachment(s: SparkSession, dir: String, k: Int = 20,
+                     broadcastAdj: Boolean = true): DataFrame = {
     val edges = copurchaseEdges(s, dir)
     val deg = symmetrize(edges).groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -1510,16 +1446,12 @@ object GraphQueries {
     * the same zero-allocation discipline as the triangle intersect,
     * NEVER a wedge join (the oracle spells the wedge join; Σ deg² vs
     * this plan's |E| adjacency rows). Broadcast vs shuffled-hash
-    * adjacency joins gate on `spark.graft.triangles.broadcastAdj`
+    * adjacency joins gate on `broadcastAdj`
     * exactly like [[triangleCount]] and [[linkJaccard]].
     */
-  def resourceAlloc(s: SparkSession, dir: String, k: Int = 20): DataFrame =
-    resourceAlloc(s, dir, k,
-      s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean)
-
-  def resourceAlloc(s: SparkSession, dir: String, k: Int,
-                    broadcastAdj: Boolean): DataFrame =
-    weightedLinkScore(s, dir, k, broadcastAdj,
+  def resourceAlloc(s: SparkSession, dir: String, k: Int = 20,
+                    broadcastAdj: Boolean = true): DataFrame =
+    weightedLinkScoreOn(copurchaseEdges(s, dir), k, broadcastAdj,
       expr("1000000 div deg"), "ra_micro")
 
   /** Shared core of [[resourceAlloc]] and [[adamicAdar]]: per-edge
@@ -1528,16 +1460,9 @@ object GraphQueries {
     * [[graft.functions.SortedIntersectWeightSum]] two-pointer merge.
     * `weight` must be an exact-integer expression over `deg`.
     */
-  private def weightedLinkScore(s: SparkSession, dir: String, k: Int,
-                                broadcastAdj: Boolean, weight: Column,
-                                outName: String): DataFrame =
-    weightedLinkScoreOn(copurchaseEdges(s, dir), k, broadcastAdj, weight,
-      outName, graphParts(s))
-
   private[graft] def weightedLinkScoreOn(edges: DataFrame, k: Int,
                                          broadcastAdj: Boolean, weight: Column,
-                                         outName: String,
-                                         nParts: Int = -1): DataFrame = {
+                                         outName: String): DataFrame = {
     val full = symmetrize(edges)
     val deg = full.groupBy(col("u").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -1559,7 +1484,7 @@ object GraphQueries {
     // adjacency table
     val adj =
       if (broadcastAdj) adj0
-      else matHashed(adj0, nParts, "node")
+      else Graft.materializeHashed(adj0, "node")
     // the u-side join attaches ONLY the neighbor-id array; the aligned
     // micro-weights ride the V side, which arrives NODE-keyed in its
     // own join and never crosses the per-edge exchange. The weight of a
@@ -1602,13 +1527,10 @@ object GraphQueries {
     * adjacency + codegen'd merge, never a wedge join; the oracle
     * spells the wedge join.
     */
-  def adamicAdar(s: SparkSession, dir: String, k: Int = 20): DataFrame =
-    adamicAdar(s, dir, k,
-      s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean)
-
-  def adamicAdar(s: SparkSession, dir: String, k: Int,
-                 broadcastAdj: Boolean): DataFrame =
-    weightedLinkScore(s, dir, k, broadcastAdj, adamicAdarWeight, "aa_micro")
+  def adamicAdar(s: SparkSession, dir: String, k: Int = 20,
+                 broadcastAdj: Boolean = true): DataFrame =
+    weightedLinkScoreOn(copurchaseEdges(s, dir), k, broadcastAdj,
+      adamicAdarWeight, "aa_micro")
 
   /** Pendant-safe micronat AA weight: 0 for deg < 2 (never summed —
     * a common neighbor always has deg ≥ 2), exact integer division of
@@ -1762,22 +1684,17 @@ object GraphQueries {
     * [[tradeEdges]]; w_{k+1}(v) = Σ_{u→v} w_k(u) — each hop is ONE
     * join of the edge table against the NODE-sized previous vector
     * (broadcast or SHUFFLE_HASH per the family's
-    * `spark.graft.triangles.broadcastAdj` gate) + ONE dst-keyed
+    * `broadcastAdj` parameter) + ONE dst-keyed
     * aggregation: the Pregel-on-dataframes step, never an adjacency
     * materialization. Final score joins three node-sized vectors and
     * TakeOrders the top 20. BIGINT stays exact: at 100 TB-scale hub
     * degree ~1e5, w3 ~ deg·(avg deg)² ~ 1e13 and ×64 is far inside
     * Long range; overflow would fail LOUDLY under ANSI, not wrap.
     */
-  def katzWalks(s: SparkSession, dir: String, k: Int = 20): DataFrame =
-    katzWalks(s, dir, k,
-      s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean)
-
-  def katzWalks(s: SparkSession, dir: String, k: Int,
-                broadcastAdj: Boolean): DataFrame = {
+  def katzWalks(s: SparkSession, dir: String, k: Int = 20,
+                broadcastAdj: Boolean = true): DataFrame = {
     val edges = tradeEdges(s, dir)
-    val side: DataFrame => DataFrame =
-      if (broadcastAdj) broadcast else _.hint("shuffle_hash")
+    val side = adjSide(broadcastAdj)
     // w1 and w2 each feed TWO consumers (the next hop and the final
     // join) — materialize the NODE-sized vectors so neither consumer
     // re-runs the edge scan behind them (the rankedAll iteration
@@ -1866,17 +1783,13 @@ object GraphQueries {
     *
     * Plan: the same [[commonCounts]] core as the link-predictor family
     * (adjacency consumed broadcast or SHUFFLE_HASH per
-    * `spark.graft.triangles.broadcastAdj`), filtered to common = 0 —
+    * `broadcastAdj`), filtered to common = 0 —
     * the sorted-merge intersection emits the zero without any extra
     * pass — then a distributed TakeOrdered(20).
     */
-  def localBridges(s: SparkSession, dir: String, k: Int = 20): DataFrame =
-    localBridges(s, dir, k,
-      s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean)
-
-  def localBridges(s: SparkSession, dir: String, k: Int,
-                   broadcastAdj: Boolean): DataFrame =
-    commonCounts(copurchaseEdges(s, dir), broadcastAdj, graphParts(s))
+  def localBridges(s: SparkSession, dir: String, k: Int = 20,
+                   broadcastAdj: Boolean = true): DataFrame =
+    commonCounts(copurchaseEdges(s, dir), broadcastAdj)
       .filter(col("common") === 0)
       .select(col("u"), col("v"), col("du"), col("dv"),
         (col("du") * col("dv")).as("strength"))
@@ -1926,22 +1839,17 @@ object GraphQueries {
     * Plan: the directed edge set is one distinct projection of
     * orders ⨝ lineitem; each HITS half-step is ONE join of the edge
     * table against the node-sized previous vector (broadcast or
-    * SHUFFLE_HASH per the family gate) + one aggregation — the
+    * SHUFFLE_HASH per `broadcastAdj`) + one aggregation — the
     * [[katzWalks]] hop shape on the directed graph. Vectors
     * materialized once per consumer fan-out.
     */
-  def hitsWalks(s: SparkSession, dir: String, k: Int = 20): DataFrame =
-    hitsWalks(s, dir, k,
-      s.conf.get("spark.graft.triangles.broadcastAdj", "true").toBoolean)
-
-  def hitsWalks(s: SparkSession, dir: String, k: Int,
-                broadcastAdj: Boolean): DataFrame = {
+  def hitsWalks(s: SparkSession, dir: String, k: Int = 20,
+                broadcastAdj: Boolean = true): DataFrame = {
     // the directed bipartite edge set rides the same conf-gated shared
     // cache as tradeEdges/copurchaseEdges (kind "bipartite"), and the
     // three vector consumers below fan out, so default-materialize
     val edges = bipartiteEdges(s, dir)
-    val side: DataFrame => DataFrame =
-      if (broadcastAdj) broadcast else _.hint("shuffle_hash")
+    val side = adjSide(broadcastAdj)
     val a1 = Graft.materialize(
       edges.groupBy(col("sup")).agg(count(lit(1)).as("a1")))
     val h1 = edges

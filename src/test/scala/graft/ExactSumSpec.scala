@@ -32,9 +32,9 @@ class ExactSumSpec extends SparkSpec {
   private lazy val ansi = session("spark.sql.ansi.enabled" -> "true")
   private lazy val legacy = session("spark.sql.ansi.enabled" -> "false")
 
-  /** ExactSum takes the eval mode of the session active when the column
-    * is built, Spark's cast that of the DataFrame's session, so build
-    * under `s` and run over a copy of the data in `s`.
+  /** Both spellings take the eval mode of the session that runs the
+    * query, so each check runs over a copy of the data in `s`, with `s`
+    * active too.
     */
   private def in(s: SparkSession, df: DataFrame): DataFrame = s.createDataFrame(df.rdd, df.schema)
   private def under[A](s: SparkSession)(body: => A): A = {
@@ -68,19 +68,21 @@ class ExactSumSpec extends SparkSpec {
       want.size
     }
 
+  /** The Spark error condition `agg` over `df` raises, if it raises. */
+  private def condition(df: DataFrame, agg: Column): Option[String] =
+    Try(df.agg(agg).collect()).failed.toOption.map { e =>
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case t: SparkThrowable if t.getCondition != null => t.getCondition }
+        .getOrElse(e.toString)
+    }
+
   /** Both spellings fail, with the same Spark error condition. */
   private def bothRaise(s: SparkSession, data: DataFrame, x: Column): String =
     under(s) {
       val df = in(s, data)
-      def condition(agg: Column): Option[String] =
-        Try(df.agg(agg).collect()).failed.toOption.map { e =>
-          Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-            .collectFirst { case t: SparkThrowable if t.getCondition != null => t.getCondition }
-            .getOrElse(e.toString)
-        }
-      val want = condition(old(x))
+      val want = condition(df, old(x))
       assert(want.isDefined, "the DECIMAL spelling did not raise")
-      assert(condition(ExactSum(x)) == want)
+      assert(condition(df, ExactSum(x)) == want)
       want.get
     }
 
@@ -208,6 +210,26 @@ class ExactSumSpec extends SparkSpec {
     agree(ansi, doubles((nonFinite ++ Seq(1.0, 2.0) ++ nonFinite).map(Double.box)), col("x"), "id")
     agree(ansi, doubles((nonFinite :+ 1.5).map(Double.box)), col("x"))
     agree(ansi, doubles(nonFinite.map(Double.box)), col("x"))
+  }
+
+  test("the eval mode is the running session's, not the one active when the column is built") {
+    val data = doubles(Seq(1.0, 1e12, 2.0).map(Double.box))
+    // built, and run, while a legacy session is active, over an ANSI
+    // session's frame: raises, as the DECIMAL spelling does there
+    under(legacy) {
+      val df = in(ansi, data)
+      val want = condition(df, old(col("x")))
+      assert(want.exists(_.startsWith("NUMERIC_VALUE_OUT_OF_RANGE")), s"DECIMAL spelling: $want")
+      assert(condition(df, ExactSum(col("x"))) == want)
+    }
+    // the mirror: under an active ANSI session over a legacy frame, the
+    // 1e12 row casts to null and drops out of both sums
+    under(ansi) {
+      val df = in(legacy, data)
+      def total(agg: Column): Double = df.agg(agg).collect().head.getDouble(0)
+      assert(total(ExactSum(col("x"))) == 3.0)
+      assert(total(old(col("x"))) == 3.0)
+    }
   }
 
   test("legacy mode: null wherever the DECIMAL spelling is null") {

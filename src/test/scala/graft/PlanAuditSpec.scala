@@ -327,6 +327,30 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("declared graph layouts: each final plan keeps its exchange count") {
+    // The iterative rows checkpoint their adjacency and vectors through
+    // Graft.materializeHashed, which declares HashPartitioning at the
+    // session's shuffle-partition count so the next join on the same key
+    // reuses the layout. A declaration at any other count is not
+    // compatible with the exchanges EnsureRequirements plans for the
+    // other side, so a join re-exchanges and the count below moves.
+    val want = Map(
+      "graph_pagerank" -> 3,
+      "graph_ppr_walks" -> 3,
+      "graph_khop_reach" -> 2,
+      "graph_sssp" -> 2,
+      "graph_label_propagation" -> 1,
+      "graph_kcore" -> 6,
+      "graph_triangles_partitioned" -> 12,
+      "graph_link_jaccard_partitioned" -> 2,
+      "graph_resource_alloc_partitioned" -> 2,
+      "graph_adamic_adar_partitioned" -> 2)
+    val got = want.keys.toSeq.sorted.map { name =>
+      name -> "Exchange".r.findAllIn(planOf(SparkEntry.queries(name)(spark, sf))).size
+    }.toMap
+    assert(got == want, s"exchange counts moved: ${got.toSeq.sorted.mkString(", ")}")
+  }
+
   test("both link-Jaccard spellings score the same top-20 edges") {
     val b = graft.queries.GraphQueries.linkJaccard(spark, sf).collect()
     val h = graft.queries.GraphQueries
